@@ -483,15 +483,6 @@ object Dedup {
       .select($"doc_id", coalesce($"g", $"doc_id").as("group_id"))
   }
 
-  /** Min-label connected components over an undirected pair list
-    * (`a_id`, `b_id`): every vertex appearing in some pair is labeled
-    * with the smallest id reachable through the pairs — pointer-doubled
-    * propagation, O(log diameter) rounds, each shuffling O(edges).
-    * Returns `(doc_id, group_id)` for the edge-induced vertex set ONLY
-    * (callers left-join the corpus so untouched rows never enter the
-    * loop). Shared by [[d6]] (text near-dup groups) and [[d11]]
-    * (embedding-space components).
-    */
   /** Edge-count ceiling for the driver union-find fast path: 4M pairs =
     * 64 MB of longs — comfortably under broadcast-table size and a
     * fraction of any driver heap, while LSH-candidate graphs at gate SFs
@@ -504,29 +495,17 @@ object Dedup {
     */
   val LocalComponentsMaxEdges = 4000000L
 
-  def componentsOf(pairs: DataFrame,
-      maxLocalEdges: Long = LocalComponentsMaxEdges): DataFrame =
-    componentsCore(pairs, maxLocalEdges, Long.MaxValue).get
-
-  /** [[componentsOf]] that GIVES UP as soon as any component's lower
-    * bound crosses `massCap`, returning None: same-labeled vertices are
-    * already proven connected at every round of min-label propagation,
-    * so the per-round max label mass is a valid lower bound on the true
-    * max component size. Callers that only need an over/under-cap
-    * DECISION (TxnEngine's fold-vs-generational dispatch) stop paying
-    * for exact labels the moment the answer is knowable. The win is
-    * bounded by how fast the mass bound grows — the round-r bound is a
-    * ~2^r-hop neighborhood, so a giant component certifies a few rounds
-    * before full convergence (a8 10M probe: [mk-pre] components
-    * 136 → 95 s), while small-component graphs pay one extra agg per
-    * round and exit with exact labels as before.
+  /** Min-label connected components over an undirected pair list
+    * (`a_id`, `b_id`): every vertex appearing in some pair is labeled
+    * with the smallest id reachable through the pairs — pointer-doubled
+    * propagation, O(log diameter) rounds, each shuffling O(edges).
+    * Returns `(doc_id, group_id)` for the edge-induced vertex set ONLY
+    * (callers left-join the corpus so untouched rows never enter the
+    * loop). Shared by [[d6]] (text near-dup groups) and [[d11]]
+    * (embedding-space components).
     */
-  private[graft] def componentsUnderCap(pairs: DataFrame, massCap: Long,
-      maxLocalEdges: Long = LocalComponentsMaxEdges): Option[DataFrame] =
-    componentsCore(pairs, maxLocalEdges, massCap)
-
-  private def componentsCore(pairs: DataFrame, maxLocalEdges: Long,
-      massCap: Long): Option[DataFrame] = {
+  def componentsOf(pairs: DataFrame,
+      maxLocalEdges: Long = LocalComponentsMaxEdges): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val debug = sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1")
@@ -545,7 +524,7 @@ object Dedup {
     // distributed loop — same min-label result (hash-gated), none of the
     // per-round job+shuffle overhead. The distributed path below remains
     // the scale story for graphs that genuinely don't fit.
-    if (p.count() <= maxLocalEdges) return Some(componentsLocal(p))
+    if (p.count() <= maxLocalEdges) return componentsLocal(p)
     // the STATIC symmetric edge frame is hash-partitioned on src once —
     // checkpoints preserve outputPartitioning, so every round's
     // edges⋈labels join plans with NO exchange of the (biggest) edge
@@ -615,22 +594,17 @@ object Dedup {
           .select($"doc_id", $"old",
             coalesce($"gg", $"group_id").as("group_id"))
           .materialize)
-        // one census pass serves three reads: the max-mass lower bound
-        // (the over-cap early exit), convergence (no label moved), and
-        // the surviving-label count (the contraction trigger). The
+        // one census pass serves two reads: convergence (no label moved)
+        // and the surviving-label count (the contraction trigger). The
         // groupBy's partial aggregation absorbs the giant label
         // map-side — the census itself never skews.
         val census = timed(s"census-$rounds")(next
           .groupBy($"group_id")
-          .agg(count(lit(1)).as("m"),
-            sum(when($"group_id" =!= $"old", 1L).otherwise(0L)).as("ch"))
-          .agg(coalesce(max($"m"), lit(0L)),
-            coalesce(sum($"ch"), lit(0L)), count(lit(1))).head())
-        val (mass, changed, nLabels) =
-          (census.getLong(0), census.getLong(1), census.getLong(2))
+          .agg(sum(when($"group_id" =!= $"old", 1L).otherwise(0L)).as("ch"))
+          .agg(coalesce(sum($"ch"), lit(0L)), count(lit(1))).head())
+        val (changed, nLabels) = (census.getLong(0), census.getLong(1))
         if (debug) System.err.println(
-          s"[cc] round $rounds mass=$mass changed=$changed labels=$nLabels")
-        if (massCap < Long.MaxValue && mass > massCap) return None
+          s"[cc] round $rounds changed=$changed labels=$nLabels")
         converged = changed == 0L
         labels = next.select($"doc_id", $"group_id")
         rounds += 1
@@ -672,25 +646,13 @@ object Dedup {
             val roots = timed(s"uf-$rounds")(
               componentsLocal(contracted)
                 .select($"doc_id".as("group_id"), $"group_id".as("root")))
-            if (massCap < Long.MaxValue) {
-              // exact masses from the composed labels WITHOUT building
-              // the full vertex mapping: per-label counts are already
-              // census-sized, and the root map is driver-small
-              val underCap = timed(s"mass-$rounds")(lbl
-                .groupBy($"group_id").agg(count(lit(1)).as("m"))
-                .join(broadcast(roots), Seq("group_id"), "left_outer")
-                .groupBy(coalesce($"root", $"group_id"))
-                .agg(sum($"m").as("mm"))
-                .filter($"mm" > massCap).limit(1).isEmpty)
-              if (!underCap) return None
-            }
             // compose: vertex → round-r label → union-find root. The
             // broadcast join keys the (skewed) label column against a
             // driver-small map — no shuffle, so the skew is free.
-            return Some(timed(s"compose-$rounds")(lbl
+            return timed(s"compose-$rounds")(lbl
               .join(broadcast(roots), Seq("group_id"), "left_outer")
               .select($"doc_id",
-                coalesce($"root", $"group_id").as("group_id"))))
+                coalesce($"root", $"group_id").as("group_id")))
           }
         }
       }
@@ -701,16 +663,25 @@ object Dedup {
     if (!converged) throw new IllegalStateException(
       s"label propagation did not converge within $maxRounds rounds; " +
         "component labels would be incorrect")
-    Some(labels)
+    labels
   }
 
-  /** Driver union-find over a small edge list (gated by
-    * [[LocalComponentsMaxEdges]]): union-by-min keeps every root the
-    * smallest id of its component, so `find` IS the min-label — exactly
-    * [[componentsOf]]'s distributed result, at the cost of one bounded
-    * collect instead of log(diameter) shuffle rounds.
-    */
+  /** [[unionFind]] as a `(doc_id, group_id)` frame. */
   private def componentsLocal(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    unionFind(pairs).toSeq.sortBy(_._1).toDF("doc_id", "group_id")
+  }
+
+  /** Driver union-find over a small (`a_id`, `b_id`) edge list (callers
+    * gate it by [[LocalComponentsMaxEdges]]): union-by-min keeps every
+    * root the smallest id of its component, so the returned vertex →
+    * root map IS the min-label — exactly [[componentsOf]]'s distributed
+    * result over the edge-induced vertex set, at the cost of one bounded
+    * collect instead of log(diameter) shuffle rounds. Shared with
+    * TxnEngine's component fold, which reads its census off the map.
+    */
+  private[graft] def unionFind(pairs: DataFrame)
+      : scala.collection.mutable.LongMap[Long] = {
     import pairs.sparkSession.implicits._
     val es = pairs.select($"a_id", $"b_id").as[(Long, Long)].collect()
     val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -726,8 +697,9 @@ object Dedup {
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    parent.keys.toSeq.sorted.map(v => (v, find(v)))
-      .toDF("doc_id", "group_id")
+    // full path compression: afterwards every vertex points at its root
+    parent.keys.toArray.foreach(find)
+    parent
   }
 
   /** Unroll depth for the components oracles: relax+double reaches

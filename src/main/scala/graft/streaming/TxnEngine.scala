@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Dedup
 import graft.plans.Materialize.MaterializeOps
 
 /** One cogroup-fold emission of [[TxnEngine.applyMultiKeyStats]]: a state
@@ -427,16 +428,12 @@ object TxnEngine {
     (st, res)
   }
 
-  /** Scheduler/apply statistics: `applyPhases` = the multi-key conflict
-    * depth (application is semantically sequential per generation);
-    * `schedulerPasses` = the pointer-doubled scheduling passes (~log2 of
-    * that depth — the scale spec's bound).
-    */
   /** `applyPhases`/`schedulerPasses` describe the generational fallback
-    * (one barrier per conflict level / pointer-doubled scheduling passes);
-    * the component-fold fast path reports applyPhases=1 plus the component
-    * census it folded (`foldedComponents`, `maxComponentTxns` — 0/0 on the
-    * generational path).
+    * (one barrier per conflict level / scheduling passes); the
+    * component-fold fast path reports applyPhases=1 plus the component
+    * census it folded (`foldedComponents`, `maxComponentTxns` over the
+    * keyed txns — 0/0 on the generational path and on a batch with no
+    * keyed txn).
     */
   final case class MkStats(applyPhases: Int, schedulerPasses: Int,
       foldedComponents: Long = 0L, maxComponentTxns: Long = 0L)
@@ -453,11 +450,22 @@ object TxnEngine {
   /** Txns-per-component cap for the in-memory component fold
     * ([[applyMultiKeyStats]]'s fast path): a batch whose largest conflict
     * component exceeds this falls back to the generational rounds, whose
-    * memory stays bounded at one generation per barrier. Override with
-    * the `spark.graft.txn.foldComponentCap` session conf (0 forces the
-    * generational path — the scheduler specs use this).
+    * memory stays bounded at one generation per barrier. Specs move it
+    * through [[applyMultiKeyCapped]]'s `cap`.
     */
   val FoldComponentCap: Long = 4L * 1000 * 1000
+
+  /** (txn_id, key) incidence rows: each distinct key a txn asserts or
+    * updates. Keyless txns have none.
+    */
+  private def txnKeysOf(flat: DataFrame): DataFrame =
+    flat.select(col("txnId").as("txn_id"),
+      explode(array_distinct(concat(
+        transform(col("asserts"), a => a.getField("key")),
+        transform(col("updates"), u => u.getField("key"))))).as("key"))
+
+  private def isKeyless: org.apache.spark.sql.Column =
+    size(col("asserts")) + size(col("updates")) === 0
 
   /** [[applyMultiKeyFrom]], also returning [[MkStats]].
     *
@@ -469,149 +477,131 @@ object TxnEngine {
     * independent. The fast path cogroups (txns, state) by component and
     * folds each component sequentially in txnId order inside one task —
     * per-key pipelining with ZERO per-depth barriers; a depth-k conflict
-    * chain costs one distributed pass, not k. Component labels come from
-    * pointer-doubled label propagation over the conflict edges (O(log
-    * depth) metadata passes, [[graft.operators.Dedup.componentsOf]]).
+    * chain costs one distributed pass, not k.
     *
     * A component's txns must fit one task (they fold sequentially — the
     * same inherent serialization the reference's waiter queue serializes
     * on); if the largest component exceeds [[FoldComponentCap]] the batch
-    * takes [[applyMultiKeyGenerational]] instead: conflict-free
-    * generations applied one barrier per conflict level with bounded
-    * per-task memory. Results are identical either way (spec-enforced).
+    * takes the generational path instead: conflict-free generations
+    * applied one barrier per conflict level with bounded per-task memory.
+    * Results are identical either way (spec-enforced).
     */
   def applyMultiKeyStats(initialState: DataFrame, txns: Dataset[Txn])
-      : (DataFrame, DataFrame, MkStats) = {
-    val spark = txns.sparkSession
+      : (DataFrame, DataFrame, MkStats) =
+    applyMultiKeyCapped(initialState, txns, FoldComponentCap)
+
+  /** [[applyMultiKeyStats]] with an injectable fold cap (spec seam).
+    *
+    * Dispatch, census and labels all come from ONE driver union-find over
+    * the conflict edges, gated by the edge count. STAR edges connect every
+    * txn on a key to the FIRST txn on that key — the same connectivity as
+    * per-key chains, built by one window over the (txn, key) rows. A
+    * component of k txns needs at least k−1 edges, so an edge count over
+    * min(cap, LocalComponentsMaxEdges) proves a component over the cap
+    * and dispatches generational on size alone (round 16: distributed
+    * labeling of the 20M adversarial batch cost 280–554 s of metadata
+    * rounds, all of it for labels that over-cap dispatch then abandons).
+    * Under the gate the edge list fits the driver, and [[Dedup.unionFind]]
+    * gives every edge-induced txn its component root (the min txnId); a
+    * keyed txn on no edge is a component of one and labels itself. The census (component count and
+    * largest component) is read off that map, and txns and the state rows
+    * they touch reach their component's fold task through the broadcast
+    * txn → root map — no label frame is joined or materialized.
+    */
+  private[graft] def applyMultiKeyCapped(initialState: DataFrame,
+      txns: Dataset[Txn], cap: Long): (DataFrame, DataFrame, MkStats) = {
+    import txns.sparkSession.implicits._
     val tds = timedStage("txn-ck")(txns.localCheckpoint(true))
     val flat = tds.toDF()
-    val txnKeys = flat.select(col("txnId").as("txn_id"),
-      explode(array_distinct(concat(
-        transform(col("asserts"), a => a.getField("key")),
-        transform(col("updates"), u => u.getField("key"))))).as("key"))
-    val arity = txnKeys.groupBy(col("txn_id"))
-      .agg(count(lit(1)).as("nk"))
-    val keyed = timedStage("keyed")(txnKeys
-      .join(arity, "txn_id")
-      .select(col("txn_id"), col("key"), (col("nk") > 1).as("is_multi"))
-      .materialize)
-
-    val cap = spark.conf
-      .get("spark.graft.txn.foldComponentCap", FoldComponentCap.toString)
-      .toLong
-    // conflict components over (txn, key) metadata: STAR edges connect
-    // every txn on a key to the FIRST txn on that key — identical
-    // connectivity to per-key chains (each key's txn set stays one
-    // blob), but the conflict-graph diameter collapses from the longest
-    // per-key run (thousands at 10M events — measured: the pointer-
-    // doubled propagation paid ~log2(run) shuffle rounds and dominated
-    // the sf10 a8 bench) to ~2 per key + the cross-key path length, so
-    // the distributed labeling converges in a handful of rounds. Labels
-    // by pointer-doubled propagation; isolated txns label themselves.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key"))
-    val chainEdges = keyed
-      .withColumn("src", min(col("txn_id")).over(w))
+    val txnKeys = txnKeysOf(flat)
+    val edgesCk = timedStage("edges")(txnKeys
+      .withColumn("src", min(col("txn_id"))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("key"))))
       .filter(col("src") =!= col("txn_id"))
       .select(col("src").as("a_id"), col("txn_id").as("b_id"))
       .distinct()
-    // over/under-cap decision WITHOUT the distributed labeling loop
-    // (round-16 fix; the r15 shape is a measured dead end): exact labels
-    // are only needed on the FOLD path, and a component of k txns needs
-    // at least k−1 conflict edges — so an edge count ≤ min(cap,
-    // LocalComponentsMaxEdges) BOTH bounds every component under the
-    // fold cap AND fits the driver union-find, while a larger batch
-    // dispatches generational on size alone. The r15/r16 probes showed
-    // why nothing cleverer pays: distributed min-label propagation on
-    // the 20M adversarial batch costs 280–554 s in metadata rounds
-    // (round 0 alone is ~106 s, before any label skew exists; the mass
-    // lower bound grows only ~5×/round so over-cap certification needs
-    // ~8 rounds; label-graph contraction attempts fail for rounds on
-    // this dense graph at ~15–70 s each) — and every second of it is
-    // spent computing labels that over-cap dispatch then ABANDONS. The
-    // only workload the edge-count rule sends generational that exact
-    // labels might have folded is >4M conflict edges with every
-    // component under 4M txns — a shape whose many-small-components
-    // structure the generational scheduler resolves in few phases
-    // anyway (phases track conflict depth, not component count).
-    val edgesCk = chainEdges.materialize
-    val edgeCount = timedStage("components")(edgesCk.count())
-    val localCap = math.min(cap,
-      graft.operators.Dedup.LocalComponentsMaxEdges)
-    val labelsOpt =
-      if (edgeCount > localCap) None
-      else Some(graft.operators.Dedup.componentsOf(edgesCk))
-    labelsOpt match {
-      case None => // a component provably exceeds the fold cap
-        applyMultiKeyGenerational(initialState, tds, keyed)
-      case Some(labels) =>
-        val comp = keyed.select(col("txn_id")).distinct()
-          .join(labels.withColumnRenamed("doc_id", "txn_id"),
-            Seq("txn_id"), "left_outer")
-          .select(col("txn_id"),
-            coalesce(col("group_id"), col("txn_id")).as("comp"))
-          .materialize
-        val sizes = timedStage("comp-census")(comp.groupBy(col("comp"))
-          .agg(count(lit(1)).as("n"))
-          .agg(max(col("n")), count(lit(1))).head())
-        val (maxComp, nComp) =
-          if (sizes.isNullAt(0)) (0L, 0L)
-          else (sizes.getLong(0), sizes.getLong(1))
-        if (maxComp <= cap)
-          applyMultiKeyFolded(initialState, tds, keyed, comp, nComp, maxComp)
-        else
-          applyMultiKeyGenerational(initialState, tds, keyed)
-    }
+      .materialize)
+    // conflict edges and keyed txns (the census must count components of
+    // one, which sit on no edge), both in ONE job: an RDD fold, where a
+    // global agg() would pay a second job for its exchange
+    val (edgeCount, keyedTxns) = edgesCk.select(lit(1L), lit(0L))
+      .union(flat.filter(!isKeyless).select(lit(0L), lit(1L)))
+      .as[(Long, Long)].rdd
+      .fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
+    if (edgeCount > math.min(cap, Dedup.LocalComponentsMaxEdges))
+      return applyGenerations(initialState, tds)
+    val root = timedStage("components")(Dedup.unionFind(edgesCk))
+    val sizes = scala.collection.mutable.LongMap.empty[Long]
+    root.foreachValue(r => sizes(r) = sizes.getOrElse(r, 0L) + 1L)
+    val isolated = keyedTxns - root.size
+    val maxComp = math.max(sizes.valuesIterator.maxOption.getOrElse(0L),
+      math.min(isolated, 1L))
+    if (maxComp > cap) return applyGenerations(initialState, tds)
+    val (state, results) = foldComponents(initialState, tds, txnKeys, root)
+    (state, results, MkStats(1, 0, sizes.size + isolated, maxComp))
   }
 
   /** Fast path: fold every conflict component's txns sequentially (txnId
     * order) against that component's slice of the state, one cogroup —
-    * all components in parallel, no cross-component coordination.
+    * all components in parallel, no cross-component coordination. `root`
+    * maps each edge-induced txn to its component; any other txn is its
+    * own component. Keyless txns stay out of the cogroup: they touch no
+    * state and succeed vacuously.
     */
-  private def applyMultiKeyFolded(initialState: DataFrame,
-      tds: Dataset[Txn], keyed: DataFrame, comp: DataFrame,
-      nComp: Long, maxComp: Long): (DataFrame, DataFrame, MkStats) = {
+  private def foldComponents(initialState: DataFrame, tds: Dataset[Txn],
+      txnKeys: DataFrame, root: scala.collection.mutable.LongMap[Long])
+      : (DataFrame, DataFrame) = {
     val spark = tds.sparkSession
     import spark.implicits._
-    val flat = tds.toDF()
+    val rootOf = spark.sparkContext.broadcast(root)
+    val txByComp = tds.filter(!isKeyless)
+      .groupByKey(t => rootOf.value.getOrElse(t.txnId, t.txnId))
     // every key belongs to exactly one component (all txns touching it
-    // are connected through it); min() just picks that label
-    val keyComp = keyed.join(comp, "txn_id")
-      .groupBy(col("key")).agg(min(col("comp")).as("comp"))
-      .materialize
-    val compTyped = comp.select(col("txn_id"), col("comp")).as[(Long, Long)]
-    val txWithComp = tds
-      .joinWith(compTyped, tds("txnId") === compTyped("txn_id"))
-      .map { case (t, (_, c)) => (c, t) }
+    // are connected through it). Not deduplicated: a key on m txns routes
+    // its state row m times (m − 1 ≤ its star edges, so under the edge
+    // gate), and the copies only re-insert the same value into the fold's
+    // map — cheaper than the shuffle a distinct() costs. Null keys match
+    // no state row; dropping them here stops the inner join below from
+    // inferring a filter of its own, so both joins see one keyComp plan.
+    val keyComp = txnKeys.as[(Long, String)]
+      .map { case (t, k) => (k, rootOf.value.getOrElse(t, t)) }
+      .toDF("key", "comp").filter(col("key").isNotNull)
     val stTouched = initialState.join(keyComp, Seq("key"))
       .select(col("comp"), col("key"), col("value"))
       .as[(Long, String, String)]
-    val folded = txWithComp.groupByKey(_._1)
-      .cogroup(stTouched.groupByKey(_._1)) { (_, txIt, stIt) =>
+    // a state emission (kind 0) per key the component read from state or
+    // wrote; a null value marks a key the component deleted
+    val folded = txByComp.cogroup(stTouched.groupByKey(_._1)) {
+      (_, txIt, stIt) =>
         val kv = scala.collection.mutable.HashMap.empty[Key, Value]
         stIt.foreach { case (_, k, v) => kv(k) = v }
         val out = List.newBuilder[FoldEmit]
-        txIt.map(_._2).toSeq.sortBy(_.txnId).foreach { t =>
-          val ok = t.asserts.forall(a => kv.get(a.key) == a.valueOption)
-          if (ok) t.updates.foreach { u =>
-            u.valueOption match {
-              case Some(v) => kv(u.key) = v
-              case None => kv.remove(u.key)
-            }
-          }
+        txIt.toSeq.sortBy(_.txnId).foreach { t =>
+          val ok = t.asserts.forall(a =>
+            Option(kv.getOrElse(a.key, null)) == a.valueOption)
+          if (ok) t.updates.foreach(u => kv(u.key) = u.valueOption.orNull)
           out += FoldEmit(1, t.txnId, null, null, ok)
         }
         kv.foreach { case (k, v) => out += FoldEmit(0, -1L, k, v, false) }
         out.result().iterator
-      }.toDF().materialize
-    val state = initialState.join(keyComp, Seq("key"), "left_anti")
-      .union(folded.filter(col("kind") === 0).select(col("key"), col("value")))
-    val results = flat
-      .filter(size(col("asserts")) + size(col("updates")) === 0)
+    }.toDF()
+    // the untouched state rows join the same checkpoint, so the post-batch
+    // state costs no job of its own. Outer join + null filter rather than
+    // left_anti: it reads keyComp with the same columns as the inner join
+    // above, so both plan one exchange of it and the second reuses it
+    val untouched = initialState.join(keyComp, Seq("key"), "left_outer")
+      .filter(col("comp").isNull)
+      .select(lit(0).as("kind"), lit(-1L).as("txnId"), col("key"),
+        col("value"), lit(false).as("succeeded"))
+    val applied = folded.union(untouched).materialize
+    rootOf.destroy()
+    val state = applied.filter(col("kind") === 0 && col("value").isNotNull)
+      .select(col("key"), col("value"))
+    val results = tds.toDF().filter(isKeyless)
       .select(col("txnId"), lit(true).as("succeeded"))
-      .union(folded.filter(col("kind") === 1)
+      .union(applied.filter(col("kind") === 1)
         .select(col("txnId"), col("succeeded")))
-    (state, results, MkStats(1, 0, nComp, maxComp))
+    (state, results)
   }
 
   /** Fallback for batches with an over-cap conflict component: schedule
@@ -635,29 +625,21 @@ object TxnEngine {
     * depth only: a 1,000-txn single-hot-key log folds in ONE phase.
     */
   private[graft] def applyMultiKeyGenerational(initialState: DataFrame,
-      txns: Dataset[Txn]): (DataFrame, DataFrame, MkStats) = {
-    val spark = txns.sparkSession
-    val tds = txns.localCheckpoint(true)
-    val flat = tds.toDF()
-    val txnKeys = flat.select(col("txnId").as("txn_id"),
-      explode(array_distinct(concat(
-        transform(col("asserts"), a => a.getField("key")),
-        transform(col("updates"), u => u.getField("key"))))).as("key"))
-    val arity = txnKeys.groupBy(col("txn_id"))
-      .agg(count(lit(1)).as("nk"))
-    val keyed = txnKeys
-      .join(arity, "txn_id")
-      .select(col("txn_id"), col("key"), (col("nk") > 1).as("is_multi"))
-      .materialize
-    applyMultiKeyGenerational(initialState, tds, keyed)
-  }
+      txns: Dataset[Txn]): (DataFrame, DataFrame, MkStats) =
+    applyGenerations(initialState, txns.localCheckpoint(true))
 
-  private def applyMultiKeyGenerational(initialState: DataFrame,
-      tds: Dataset[Txn], keyed: DataFrame)
+  private def applyGenerations(initialState: DataFrame, tds: Dataset[Txn])
       : (DataFrame, DataFrame, MkStats) = {
     val spark = tds.sparkSession
     import spark.implicits._
     val flat = tds.toDF()
+    val txnKeys = txnKeysOf(flat)
+    val arity = txnKeys.groupBy(col("txn_id"))
+      .agg(count(lit(1)).as("nk"))
+    val keyed = timedStage("keyed")(txnKeys
+      .join(arity, "txn_id")
+      .select(col("txn_id"), col("key"), (col("nk") > 1).as("is_multi"))
+      .materialize)
     val asserts = timedStage("asserts")(flat
       .select(col("txnId").as("txn_id"), explode(col("asserts")).as("a"))
       .select(col("txn_id"), col("a.key").as("key"),
@@ -720,7 +702,7 @@ object TxnEngine {
     var state = initialState
     // keyless txns never enter the scheduler: vacuously successful
     val resultParts = scala.collection.mutable.ArrayBuffer[DataFrame](
-      flat.filter(size(col("asserts")) + size(col("updates")) === 0)
+      flat.filter(isKeyless)
         .select(col("txnId").as("txn_id"), lit(true).as("succeeded")))
     var phase = 0
     while (phase < numPhases) {
@@ -813,9 +795,11 @@ object TxnEngine {
     * deterministic sequential semantics (proved by the spec oracle).
     *
     * Use as the `foreachBatch` sink of a `Dataset[Txn]` stream; the state
-    * and accumulated per-txn results stay DataFrames throughout.
-    */
-  /** @param checkpointDir when set, every committed batch persists the KV
+    * and accumulated per-txn results stay DataFrames throughout, each
+    * re-rooted on one checkpoint per batch, so a batch's plan and job
+    * count do not grow with the number of batches before it.
+    *
+    * @param checkpointDir when set, every committed batch persists the KV
     *   state and that batch's results as parquet plus a commit marker —
     *   `dir/state/&lt;batchId&gt;`, `dir/results/&lt;batchId&gt;`,
     *   `dir/commits/&lt;batchId&gt;` (marker last, so a crash mid-write
@@ -823,10 +807,10 @@ object TxnEngine {
     *   same dir restores from the highest committed batch, and
     *   `processBatch` skips batchIds at or below it — exactly the replayed
     *   micro-batch a restarted `foreachBatch` query re-delivers. Without
-    *   it, state lives only in executor block storage (localCheckpoint)
-    *   and dies with the session — the reference's Kafka-loop state is
-    *   replayable by design (StreamyDb.scala:177-242); this is the Spark
-    *   durable analog.
+    *   it, state and results live only in executor block storage (each
+    *   batch's localCheckpoint) and die with the session — the
+    *   reference's Kafka-loop state is replayable by design
+    *   (StreamyDb.scala:177-242); this is the Spark durable analog.
     */
   final class MultiKeyStream(spark: SparkSession,
       checkpointDir: Option[String] = None) {
@@ -878,7 +862,7 @@ object TxnEngine {
             true).close()
           lastCommitted = batchId
         case None =>
-          stateDf = st
+          stateDf = st.materialize
           resultsDf = resultsDf.union(res).materialize
       }
     }

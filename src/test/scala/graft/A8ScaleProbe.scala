@@ -108,7 +108,7 @@ import org.apache.spark.sql.functions._
   *      distinct pairs down to 54k labels) cost 15-69 s each — 172.6 s
   *      of the 554.3 s components total measured with it on (r15's
   *      loop recorded 279.7 s on r15's faster session). The mechanism
-  *      remains in componentsCore where it belongs — the EXACT-labels
+  *      remains in componentsOf where it belongs — the EXACT-labels
   *      path (d6/d11-scale graphs) short-circuits the skew-bound late
   *      rounds — but no decision path should pay it.
   *   2. Components DECISION = edge count, no labeling at all: a

@@ -74,23 +74,15 @@ class Round15Spec extends AnyFunSuite {
     assert(!plan.contains("Exchange hashpartitioning(o_orderkey"))
   }
 
-  test("componentsUnderCap early-exits over cap, exact labels under it") {
+  test("componentsOf gives exact min-labels on the distributed path") {
     import s.implicits._
-    // a 10-vertex path: one component of mass 10. Force the distributed
-    // path (maxLocalEdges=0).
+    // a 10-vertex path: one component. Force the distributed path
+    // (maxLocalEdges=0).
     val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    // cap below the component mass: must certify over-cap (None)
-    assert(operators.Dedup.componentsUnderCap(pairs, 4L, 0L).isEmpty,
-      "mass 10 > cap 4 must early-exit with None")
-    // cap above it: must return the exact min-labels
-    val labels = operators.Dedup.componentsUnderCap(pairs, 100L, 0L).get
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == (0L to 9L).map(_ -> 0L).toMap,
-      s"wrong labels: $labels")
-    // and the uncapped public API is unchanged by the refactor
     val viaPublic = operators.Dedup.componentsOf(pairs, 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaPublic == labels)
+    assert(viaPublic == (0L to 9L).map(_ -> 0L).toMap,
+      s"wrong labels: $viaPublic")
   }
 
   test("stale manifest (regenerated source data) forces a rebuild") {

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 invariants: the Hints.estimate structural contract (sum only
   * through row-bounded operators), the components label-graph contraction
-  * (bit-identical labels, over-cap decision preserved), Bucketed's orphan
+  * (bit-identical labels), Bucketed's orphan
   * sweep + stale-retire grace, h7's bounded generation dirs, and the
   * PlanAudit partition-filter suppression keyed on the filter's own
   * references.
@@ -63,12 +63,6 @@ class Round16Spec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaContraction == truth)
     assert(truth.values.toSet == Set(0L, 1L), s"bad truth: ${truth.values.toSet}")
-    // decision semantics across the contraction path: a 50-vertex
-    // component must certify over a cap of 10 and stay exact under 1000
-    assert(operators.Dedup.componentsUnderCap(pairs, 10L, 60L).isEmpty)
-    val under = operators.Dedup.componentsUnderCap(pairs, 1000L, 60L)
-    assert(under.map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-      .contains(truth))
   }
 
   test("contraction retry gate stays exact when the first attempt fails") {

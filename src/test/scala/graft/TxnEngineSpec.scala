@@ -268,6 +268,112 @@ class TxnEngineSpec extends AnyFunSuite {
       "restored results diverge from oracle")
   }
 
+  private def stateMap(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+    df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  test("multi-key stream state plan stays bounded across batches") {
+    import s.implicits._
+    // every 5th txn is keyless: those succeed vacuously outside the fold
+    // and must still be reported exactly once
+    val txns = randomTxns(31L, 120, 40).map { t =>
+      if (t.txnId % 5 == 4) Txn(t.txnId, Seq.empty, Seq.empty) else t
+    }
+    val mks = new TxnEngine.MultiKeyStream(s)
+    def planNodes = mks.state.queryExecution.logical.collect { case p => p }.size
+    val nodes = txns.grouped(20).zipWithIndex.map { case (b, i) =>
+      mks.processBatch(s.createDataset(b), i.toLong)
+      planNodes
+    }.toList
+    assert(nodes.size == 6)
+    assert(nodes.last == nodes.head, s"state plan grew per batch: $nodes")
+    // re-rooted every batch: the carried state is one checkpoint leaf
+    assert(nodes.forall(_ == 1), s"state not re-rooted: $nodes")
+    val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
+    assert(stateMap(mks.state) == oracleState)
+    val gotRes = mks.results.as[MkResult].collect().toSeq
+    assert(gotRes.map(_.txnId).distinct.size == gotRes.size,
+      "a txn reported more than once")
+    assert(gotRes.sortBy(_.txnId) == oracleResults.sortBy(_.txnId))
+  }
+
+  test("fold census counts components of one and ignores keyless txns") {
+    import s.implicits._
+    def kv(k: String, v: String = null) = KeyValueOption(k, Option(v))
+    // state the batch starts from, built by txns before the batch
+    val seed = Seq(
+      Txn(0L, Seq.empty, Seq(kv("a", "0"), kv("b1", "x"), kv("i9", "s"),
+        kv("untouched", "u"))))
+    val batch = Seq(
+      // component of 5 on the hot key "a", plus one private key each
+      Txn(10L, Seq(kv("a", "0")), Seq(kv("a", "1"), kv("a10", "p"))),
+      Txn(12L, Seq(kv("a", "0")), Seq(kv("a", "2"), kv("a12", "p"))), // fails
+      Txn(14L, Seq(kv("a", "1")), Seq(kv("a", "3"))),
+      Txn(16L, Seq.empty, Seq(kv("a", "4"), kv("a14"))),
+      Txn(18L, Seq(kv("a", "4")), Seq(kv("a10"))),
+      // component of 3: a b0-b1 / b1-b2 / b2-b3 ladder, deleting b1
+      Txn(11L, Seq(kv("b1", "x")), Seq(kv("b0", "y"), kv("b1"))),
+      Txn(13L, Seq(kv("b1")), Seq(kv("b2", "z"))),
+      Txn(15L, Seq(kv("b2", "z")), Seq(kv("b3", "w"))),
+      // four isolated keyed txns, one deleting a state key
+      Txn(17L, Seq.empty, Seq(kv("i17", "q"))),
+      Txn(19L, Seq(kv("i9", "s")), Seq(kv("i9"))),
+      Txn(20L, Seq(kv("i20", "nope")), Seq(kv("i20", "r"))), // fails
+      Txn(21L, Seq(kv("i21")), Seq(kv("i21", "t"))),
+      // two keyless txns
+      Txn(22L, Seq.empty, Seq.empty),
+      Txn(23L, Seq.empty, Seq.empty))
+    val initial = TxnEngine.sequentialOracle(seed)._1.toSeq.toDF("key", "value")
+    val (stateDf, resultsDf, stats) =
+      TxnEngine.applyMultiKeyStats(initial, batch.toDS())
+    val (oracleState, oracleResults) = TxnEngine.sequentialOracle(seed ++ batch)
+    assert(stats == MkStats(1, 0, 6L, 5L), s"census: $stats")
+    assert(stateMap(stateDf) == oracleState)
+    assert(resultsDf.as[MkResult].collect().toSeq.sortBy(_.txnId) ==
+      oracleResults.filter(_.txnId >= 10L))
+    assert(!oracleResults.forall(_.succeeded), "setup: some asserts must fail")
+
+    val empty = Seq.empty[(String, String)].toDF("key", "value")
+    val (_, noRes, noStats) =
+      TxnEngine.applyMultiKeyStats(initial, Seq.empty[Txn].toDS())
+    assert(noStats == MkStats(1, 0, 0L, 0L) && noRes.isEmpty)
+    val keyless = Seq(Txn(1L, Seq.empty, Seq.empty), Txn(2L, Seq.empty, Seq.empty))
+    val (klState, klRes, klStats) =
+      TxnEngine.applyMultiKeyStats(empty, keyless.toDS())
+    assert(klStats == MkStats(1, 0, 0L, 0L), s"all-keyless census: $klStats")
+    assert(klState.isEmpty)
+    assert(klRes.as[MkResult].collect().toSeq.sortBy(_.txnId) ==
+      Seq(MkResult(1L, true), MkResult(2L, true)))
+  }
+
+  test("fold cap boundary: cap txns fold, cap + 1 go generational") {
+    import s.implicits._
+    // an n-txn c_i/c_{i+1} chain is one component of n txns on n-1 edges;
+    // n = cap + 1 passes the edge gate, so the union-find census is what
+    // sends it generational, and n = cap + 2 is refused by the edge gate
+    val cap = 6L
+    def chain(n: Int) = (0 until n).map { i =>
+      Txn(i.toLong,
+        asserts = if (i == 0) Seq.empty
+          else Seq(KeyValueOption(s"c$i", Some(s"v${i - 1}"))),
+        updates = Seq(KeyValueOption(s"c$i", Some(s"v$i")),
+          KeyValueOption(s"c${i + 1}", Some(s"v$i"))))
+    }
+    val empty = Seq.empty[(String, String)].toDF("key", "value")
+    for (n <- Seq(cap.toInt, cap.toInt + 1, cap.toInt + 2)) {
+      val txns = chain(n)
+      val (stateDf, resultsDf, stats) =
+        TxnEngine.applyMultiKeyCapped(empty, txns.toDS(), cap)
+      val expected =
+        if (n <= cap) MkStats(1, 0, 1L, n.toLong)
+        else MkStats(n, stats.schedulerPasses)
+      assert(stats == expected, s"n=$n took $stats")
+      val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
+      assert(stateMap(stateDf) == oracleState, s"state diverges at n=$n")
+      assert(resultsDf.as[MkResult].collect().toSeq.sortBy(_.txnId) ==
+        oracleResults, s"results diverge at n=$n")
+    }
+  }
+
   test("a8 multi-key workload matches the sequential oracle") {
     val txns = TxnQueries.multiKeyWorkload(s, d)
     val (stateDf, results) = TxnEngine.applyMultiKey(s, txns)
