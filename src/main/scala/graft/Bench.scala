@@ -212,7 +212,7 @@ object Bench {
       val wl = operators.TxnQueries.multiKeyWorkloadDS(spark, sfDir)
       val empty = Seq.empty[(String, String)].toDF("key", "value")
       val t8 = System.nanoTime()
-      val (st8, _, s8) = streaming.TxnEngine.applyMultiKeyStats(empty, wl)
+      val (st8, _, s8) = streaming.TxnEngine.applyMultiKey(empty, wl)
       st8.write.format("noop").mode("overwrite").save()
       val a8Sec = (System.nanoTime() - t8) / 1e9
       val depth = 64
@@ -224,7 +224,7 @@ object Bench {
             streaming.TxnEngine.KeyValueOption(s"k${i % 7}", Some(i.toString))))
       }.toDS()
       val t0 = System.nanoTime()
-      val (stC, _, sC) = streaming.TxnEngine.applyMultiKeyStats(empty, chain)
+      val (stC, _, sC) = streaming.TxnEngine.applyMultiKey(empty, chain)
       stC.write.format("noop").mode("overwrite").save()
       val chainSec = (System.nanoTime() - t0) / 1e9
       f""""a8_phases":${s8.applyPhases},"a8_components":${s8.foldedComponents},""" +

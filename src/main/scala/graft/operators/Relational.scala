@@ -165,44 +165,6 @@ object Relational {
         $"l_orderkey" === $"o_orderkey"))
   }
 
-  /** The aggregate-then-join candidate for q60's rollup tail (r15 verdict
-    * item 4): supplier joins FIRST on the supp key alone (projected,
-    * broadcast-guarded), revenue pre-aggregates per (custkey, supplier
-    * nation) — the partials stay EXACT unrounded decimals so the one
-    * rounding at the end matches [[q5Tail]] bit-for-bit — and only then
-    * does the (much smaller) partial stream probe the customer
-    * broadcast, with the local-supplier predicate expressed as the
-    * c_nationkey = s_nationkey join condition. Same answer by
-    * construction: customer is key-unique, so deferring its nation
-    * equality past the pre-agg drops exactly the same rows.
-    *
-    * A/B result (sf100 isolated min-of-3, PERF_r16.md §3) decides
-    * whether [[q60]] adopts it.
-    */
-  private[graft] def q60PreAgg(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val facts = graft.sources.Bucketed.lineitem(s, dir).hint("merge")
-      .join(graft.sources.Bucketed.orders(s, dir),
-        $"l_orderkey" === $"o_orderkey")
-    val pre = facts
-      .filter($"o_orderdate" >= lit("1996-01-01").cast("timestamp") &&
-        $"o_orderdate" < lit("1998-01-01").cast("timestamp"))
-      .join(Hints.maybeBroadcast(Tables.supplier(s, dir)
-          .select($"s_suppkey", $"s_nationkey")),
-        $"l_suppkey" === $"s_suppkey")
-      .groupBy($"o_custkey", $"s_nationkey")
-      .agg(sum(($"l_extendedprice" * (lit(1.0) - $"l_discount"))
-        .cast("decimal(30,10)")).as("rev"))
-    pre
-      .join(Hints.maybeBroadcast(Tables.customer(s, dir)
-          .select($"c_custkey", $"c_nationkey")),
-        $"o_custkey" === $"c_custkey" && $"s_nationkey" === $"c_nationkey")
-      .join(broadcast(Tables.nation(s, dir)), $"s_nationkey" === $"n_nationkey")
-      .join(broadcast(Tables.region(s, dir)), $"n_regionkey" === $"r_regionkey")
-      .groupBy($"r_name", $"n_name")
-      .agg(dsum($"rev").as("revenue"))
-  }
-
   val q5Sql: String = s"""
     SELECT r_name, n_name,
       ${dsumSql("l_extendedprice * (1.0 - l_discount)")} AS revenue

@@ -240,14 +240,17 @@ object TxnQueries {
   def multiKeyWorkload(s: SparkSession, dir: String): Seq[TxnEngine.Txn] =
     multiKeyWorkloadDS(s, dir).collect().sortBy(_.txnId).toSeq
 
-  /** a8: multi-key Calvin — generation-scheduled distributed application
-    * (scheduling, assert evaluation, and state merges all run as
-    * DataFrame rounds; the driver holds a round counter). Hash-gated by
+  /** a8: multi-key Calvin — [[TxnEngine.applyMultiKey]] from an empty
+    * state (conflict components fold in parallel; an over-cap component
+    * sends the batch to generation-scheduled rounds). Hash-gated by
     * [[a8Sql]]'s recursive-CTE interpreter and spec-verified against the
     * sequential interpreter.
     */
-  def a8(s: SparkSession, dir: String): DataFrame =
-    TxnEngine.applyMultiKey(multiKeyWorkloadDS(s, dir))._1
+  def a8(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    TxnEngine.applyMultiKey(Seq.empty[(String, String)].toDF("key", "value"),
+      multiKeyWorkloadDS(s, dir))._1
+  }
 
   /** a8/a9 oracle: a sequential interpreter in SQL. The multi-key fold is
     * replayed one txn per recursion step, carrying the whole KV state as

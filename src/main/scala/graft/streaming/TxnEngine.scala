@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Dedup
 import graft.plans.Materialize.MaterializeOps
 
-/** One cogroup-fold emission of [[TxnEngine.applyMultiKeyStats]]: a state
+/** One cogroup-fold emission of [[TxnEngine.applyMultiKey]]: a state
   * row (kind 0) or a txn result (kind 1). Top-level (not nested in
   * `object TxnEngine`) because Spark's encoder codegen emits Janino code
   * in another package that must instantiate it and call its accessors — a
@@ -35,11 +35,17 @@ final case class FoldEmit(kind: Int, txnId: Long, key: String,
   *    `flatMapGroupsWithState` on a stream (state carries across
   *    micro-batches). No feedback topic needed because a single-key txn's
   *    reads and writes co-locate on its shuffle partition.
-  *  - multi-key transactions: Calvin's scheduler is logically centralized;
-  *    here the txn *metadata* (id → keys) is scheduled into conflict-free
-  *    generations, and each generation's asserts/updates are evaluated
-  *    distributed (join state on key → all-asserts gate → merge updates).
-  *    Rounds = conflict chain depth, independent of data volume.
+  *  - multi-key transactions, one entry point ([[applyMultiKey]]): txns
+  *    that share a key (transitively) form a conflict component, and each
+  *    component folds sequentially in txnId order inside one task — all
+  *    components in parallel, one distributed pass. A batch whose largest
+  *    component is over [[FoldComponentCap]] falls back to Calvin's
+  *    logically centralized scheduler: the txn *metadata* (id → keys) is
+  *    scheduled into conflict-free generations ([[generations]]: one
+  *    sorted scan, since txnId order is topological; distributed chain
+  *    relaxation past its size gates), and each generation's
+  *    asserts/updates are evaluated distributed (join state on key →
+  *    all-asserts gate → merge updates), one barrier per conflict level.
   */
 object TxnEngine {
 
@@ -152,49 +158,29 @@ object TxnEngine {
   // ---------------------------------------------------------------------
 
   /** Conflict-layer ("generation") assignment over (txn_id, key) metadata
-    * rows — output is (txn_id, gen). A txn's generation is its
-    * longest-path depth in the conflict DAG whose edges connect
+    * rows: returns ((txn_id, gen), scheduling passes). A txn's generation
+    * is its longest-path depth in the conflict DAG whose edges connect
     * consecutive txns on each key: exactly the partial order the
     * reference's per-key lock-waiter queues drain without global
     * synchronization (StreamyDb.scala:66-129).
     *
-    * Computed by max-plus path doubling instead of one ready-set round per
-    * generation: R starts as the chain edges (distance 1) and every pass
-    * unions R with R∘R (join on the midpoint, add distances, keep the max
-    * per (src, dst) pair), doubling the resolved horizon — a depth-k
-    * conflict chain schedules in ceil(log2 k)+1 distributed passes, not k.
-    * gen(t) = max distance over pairs ending at t (0 for roots).
-    *
-    * Metadata cost, stated plainly: R holds (ancestor, descendant, dist)
-    * rows within conflict chains — O(n·depth) triples of longs (O(n²) for
-    * one depth-n chain), and the R∘R midpoint join's pre-aggregate
-    * intermediate can approach O(n³) rows on deep/dense conflict graphs —
-    * the price of trading depth-many scheduling barriers for log-many.
-    * Calvin-style engines bound n per scheduling epoch (here: the
-    * micro-batch), which bounds R; the txn *data* never enters the
-    * scheduler. As a backstop for a pathological micro-batch, the
-    * convergence probe watches R's pair count and bails out to per-node
-    * CHAIN relaxation (O(n) state; one pass per key-switch on the
-    * critical path, not per depth level — see
-    * [[chainRelaxGenerations]]) the moment the closure crosses
-    * [[MaxClosurePairs]], so shuffle volume is capped whichever way the
-    * batch is shaped.
+    * Conflict edges always point from a smaller txnId to a larger one,
+    * so txnId order is topological. Under [[SeqScheduleMaxRows]] and
+    * [[SeqScheduleMaxKeys]] ONE sorted scan resolves every generation
+    * ([[sequentialGenerations]], 1 pass); past either gate the batch is
+    * cluster-sized and [[chainRelaxGenerations]] schedules it in
+    * distributed passes with O(n) state. The txn *data* never enters the
+    * scheduler.
     */
-  def generationsDF(txnKeys: DataFrame): DataFrame =
-    generationsCounted(txnKeys)._1
-
-  /** [[generationsDF]] plus the number of distributed scheduling passes
-    * (the scale spec asserts it stays ~log2 of the conflict depth).
-    */
-  def generationsCounted(txnKeys: DataFrame): (DataFrame, Int) =
+  def generations(txnKeys: DataFrame): (DataFrame, Int) =
     generationsGated(txnKeys, SeqScheduleMaxRows, SeqScheduleMaxKeys)
 
-  /** [[generationsCounted]] with injectable caps (spec seam). One scan
+  /** [[generations]] with injectable caps (spec seam). One scan
     * decides the dispatch: rows bound the single task's sort volume,
-    * DISTINCT keys bound its heap (the key→gen map) — the r16 advice
-    * gap was gating on rows alone, which admits a 64M-row
-    * all-unique-key batch whose map would hold ~6 GB in one task. The
-    * ±2% HLL error is noise against the 2× headroom in the key cap.
+    * DISTINCT keys bound its heap (the key→gen map) — gating on rows
+    * alone would admit a 64M-row all-unique-key batch whose map would
+    * hold ~6 GB in one task. The ±2% HLL error is noise against the 2×
+    * headroom in the key cap.
     */
   private[graft] def generationsGated(txnKeys: DataFrame, maxRows: Long,
       maxKeys: Long): (DataFrame, Int) = {
@@ -202,7 +188,7 @@ object TxnEngine {
       count(lit(1)), approx_count_distinct(col("key"))).head()
     if (gate.getLong(0) <= maxRows && gate.getLong(1) <= maxKeys)
       (sequentialGenerations(txnKeys), 1)
-    else generationsCounted(txnKeys, MaxClosurePairs)
+    else chainRelaxGenerations(txnKeys)
   }
 
   /** Incidence-row ceiling for [[sequentialGenerations]]: 64M (txn, key)
@@ -221,26 +207,21 @@ object TxnEngine {
     */
   val SeqScheduleMaxKeys: Long = 16L * 1000 * 1000
 
-  /** EXACT longest-path generations in ONE sequential pass (round 16).
+  /** EXACT longest-path generations in ONE sequential pass.
     *
-    * The conflict DAG's edges always point from a smaller txnId to a
-    * larger one (per-key chains link consecutive txns in txnId order),
-    * so txnId order IS a topological order and the longest-path
-    * recurrence gen(t) = max over t's keys k of (gen(last txn on k) + 1)
-    * resolves left to right in a single scan — the same inherent serial
-    * order the apply loop's barriers respect, and the same order the
-    * reference's per-key waiter queues drain
-    * (reference StreamyDb.scala:66-129). The scan runs as ONE TASK (not
-    * on the driver): repartition(1) + in-partition sort by (txn_id,
-    * key), then a key→gen map carried through the iterator. 22
-    * relaxation passes × two 40M-row shuffle legs each became one
-    * 40M-row shuffle + a linear scan on the 20M probe
-    * (A8ScaleProbe scaladoc r16 row).
+    * Because txnId order is topological, the longest-path recurrence
+    * gen(t) = max over t's keys k of (gen(last txn on k) + 1) resolves
+    * left to right in a single scan — the same inherent serial order the
+    * apply loop's barriers respect, and the same order the reference's
+    * per-key waiter queues drain (reference StreamyDb.scala:66-129). The
+    * scan runs as ONE TASK (not on the driver): repartition(1) +
+    * in-partition sort by (txn_id, key), then a key→gen map carried
+    * through the iterator. 22 relaxation passes × two 40M-row shuffle
+    * legs each became one 40M-row shuffle + a linear scan on the 20M
+    * probe (A8ScaleProbe scaladoc r16 row).
     *
     * Adjacent duplicate (txn, key) rows are skipped in-scan, so callers
-    * need not pre-distinct. Gated by [[SeqScheduleMaxRows]]; past it the
-    * distributed doubling/relaxation machinery takes over unchanged
-    * (and stays spec-pinned via the 2-arg [[generationsCounted]]).
+    * need not pre-distinct.
     */
   private[graft] def sequentialGenerations(txnKeys: DataFrame): DataFrame = {
     val spark = txnKeys.sparkSession
@@ -276,58 +257,7 @@ object TxnEngine {
       .toDF("txn_id", "gen")
   }
 
-  /** Closure-size backstop: once the max-plus relation holds more pairs
-    * than this, path doubling is abandoned for label relaxation (its
-    * *next* squaring could shuffle up to pairs²/n rows). 2M (ancestor,
-    * descendant, dist) triples ≈ 50 MB — trivially spillable, and far
-    * beyond any sane micro-batch's conflict metadata.
-    */
-  val MaxClosurePairs: Long = 2L * 1000 * 1000
-
-  private[graft] def generationsCounted(
-      txnKeys: DataFrame, maxClosurePairs: Long): (DataFrame, Int) = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("txn_id"))
-    val ids = txnKeys.select(col("txn_id")).distinct().materialize
-    val edges = txnKeys
-      .select(col("txn_id"), col("key")).distinct()
-      .withColumn("src", lag(col("txn_id"), 1).over(w))
-      .filter(col("src").isNotNull)
-      .select(col("src"), col("txn_id").as("dst")).distinct()
-      .withColumn("d", lit(1L))
-      .materialize
-    // (pair count, total distance) grows strictly monotonically until the
-    // max-plus closure is reached — a scalar convergence probe per pass
-    def weight(df: DataFrame): (Long, Long) = {
-      val row = df.agg(count(lit(1)), coalesce(sum(col("d")), lit(0L))).head()
-      (row.getLong(0), row.getLong(1))
-    }
-    def gensFromDepth(depth: DataFrame): DataFrame = ids
-      .join(depth, ids("txn_id") === depth("dst"), "left_outer")
-      .select(ids("txn_id"), coalesce(col("g"), lit(0L)).cast("int").as("gen"))
-    var r = edges
-    var passes = 0
-    var prev = weight(r)
-    var converged = prev._1 == 0L
-    while (!converged) {
-      if (prev._1 > maxClosurePairs)
-        return chainRelaxGenerations(ids, txnKeys, passes)
-      val squared = r.as("a").join(r.as("b"), col("a.dst") === col("b.src"))
-        .select(col("a.src").as("src"), col("b.dst").as("dst"),
-          (col("a.d") + col("b.d")).as("d"))
-      val next = r.union(squared)
-        .groupBy(col("src"), col("dst")).agg(max(col("d")).as("d"))
-        .materialize
-      val cur = weight(next)
-      converged = cur == prev
-      prev = cur
-      r = next
-      passes += 1
-    }
-    (gensFromDepth(r.groupBy(col("dst")).agg(max(col("d")).as("g"))), passes)
-  }
-
-  /** Fallback scheduler: per-node longest-path labels by CHAIN
+  /** Distributed scheduler: per-node longest-path labels by CHAIN
     * relaxation. State is one (txn_id, gen) row per txn (O(n)); each
     * pass joins the labels to the (txn_id, key, rank) incidence rows and
     * takes a per-key window prefix-max — which propagates a label along
@@ -341,17 +271,13 @@ object TxnEngine {
     * in 22 passes — the adversarial random graph's critical path
     * switches keys on most hops, so the pass win there is modest; the
     * structural win is on run-heavy logs, where a whole hot-key run
-    * costs ONE pass — TxnEngineSpec pins 50-deep single-chain at 2
-    * passes vs the old 50). Degenerate case
-    * (every edge switches key, e.g. the spec's c_i/c_{i+1} ladder) falls
-    * back to one level per pass — the old edge-relaxation shape, never
-    * worse. Converges when the label sum stops moving (labels only grow,
-    * by ≥1 per unconverged pass); candidates are always realized by a
-    * genuine DAG path, so the fixed point is exactly the longest-path
-    * depth.
+    * costs ONE pass). Degenerate case (every edge switches key, e.g. a
+    * c_i/c_{i+1} ladder) falls back to one level per pass. Converges
+    * when the label sum stops moving (labels only grow, by ≥1 per
+    * unconverged pass); candidates are always realized by a genuine DAG
+    * path, so the fixed point is exactly the longest-path depth.
     */
-  private def chainRelaxGenerations(ids: DataFrame, txnKeys: DataFrame,
-      passesSoFar: Int): (DataFrame, Int) = {
+  private def chainRelaxGenerations(txnKeys: DataFrame): (DataFrame, Int) = {
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("txn_id"))
     val wChain = org.apache.spark.sql.expressions.Window
@@ -362,15 +288,14 @@ object TxnEngine {
     // PRESERVES that partitioning (LogicalRDD keeps outputPartitioning),
     // so the two txn_id joins inside a pass plan with NO exchange: the
     // only shuffles per pass are the per-key window sort and the
-    // cross-key groupBy — 2 legs instead of 5 (the A8ScaleProbe
-    // [mk-pre] stage=scheduling line measures the effect).
+    // cross-key groupBy.
     val ranked = txnKeys.select(col("txn_id"), col("key")).distinct()
       .withColumn("rank", row_number().over(wRank).cast("long"))
       .repartition(col("txn_id"))
       .materialize
-    var gens = ids.repartition(col("txn_id"))
+    var gens = ranked.select(col("txn_id")).distinct()
       .withColumn("gen", lit(0L)).materialize
-    var passes = passesSoFar
+    var passes = 0
     var prevSum = 0L
     var converged = false
     while (!converged) {
@@ -392,42 +317,6 @@ object TxnEngine {
     (gens.select(col("txn_id"), col("gen").cast("int").as("gen")), passes)
   }
 
-  /** Spec/driver convenience over [[generationsDF]]. */
-  def generations(spark: SparkSession, txns: Seq[Txn]): Seq[Seq[Txn]] = {
-    import spark.implicits._
-    val keys = txns.flatMap(t =>
-      (t.asserts ++ t.updates).map(kv => (t.txnId, kv.key))).distinct
-    val byGen = generationsDF(keys.toDF("txn_id", "key"))
-      .as[(Long, Int)].collect().groupBy(_._2)
-    val byId = txns.map(t => t.txnId -> t).toMap
-    (0 until byGen.size).map(g => byGen(g).map(r => byId(r._1)).toSeq.sortBy(_.txnId))
-  }
-
-  /** Apply a multi-key txn log, fully distributed: per scheduler round,
-    * the generation's asserts join the state (outer join on key), txns
-    * gate on all-asserts-match, and successful updates merge back into
-    * state. Scheduling metadata, per-txn results, and the KV state all
-    * stay DataFrames keyed by txn_id/key; the driver holds only the round
-    * counter and a per-round emptiness flag.
-    *
-    * Returns (final state (key, value), per-txn results (txnId,
-    * succeeded)).
-    */
-  def applyMultiKey(txns: Dataset[Txn]): (DataFrame, DataFrame) = {
-    val spark = txns.sparkSession
-    import spark.implicits._
-    applyMultiKeyFrom(Seq.empty[(Key, Value)].toDF("key", "value"), txns)
-  }
-
-  /** [[applyMultiKey]] starting from an existing state table — the unit of
-    * work of one streaming micro-batch (see [[MultiKeyStream]]).
-    */
-  def applyMultiKeyFrom(initialState: DataFrame, txns: Dataset[Txn])
-      : (DataFrame, DataFrame) = {
-    val (st, res, _) = applyMultiKeyCounted(initialState, txns)
-    (st, res)
-  }
-
   /** `applyPhases`/`schedulerPasses` describe the generational fallback
     * (one barrier per conflict level / scheduling passes); the
     * component-fold fast path reports applyPhases=1 plus the component
@@ -438,17 +327,8 @@ object TxnEngine {
   final case class MkStats(applyPhases: Int, schedulerPasses: Int,
       foldedComponents: Long = 0L, maxComponentTxns: Long = 0L)
 
-  /** [[applyMultiKeyStats]] returning only the apply-phase count (the
-    * hot-key scalability metric the interleaving specs assert on).
-    */
-  def applyMultiKeyCounted(initialState: DataFrame, txns: Dataset[Txn])
-      : (DataFrame, DataFrame, Int) = {
-    val (st, res, stats) = applyMultiKeyStats(initialState, txns)
-    (st, res, stats.applyPhases)
-  }
-
   /** Txns-per-component cap for the in-memory component fold
-    * ([[applyMultiKeyStats]]'s fast path): a batch whose largest conflict
+    * ([[applyMultiKey]]'s fast path): a batch whose largest conflict
     * component exceeds this falls back to the generational rounds, whose
     * memory stays bounded at one generation per barrier. Specs move it
     * through [[applyMultiKeyCapped]]'s `cap`.
@@ -467,7 +347,10 @@ object TxnEngine {
   private def isKeyless: org.apache.spark.sql.Column =
     size(col("asserts")) + size(col("updates")) === 0
 
-  /** [[applyMultiKeyFrom]], also returning [[MkStats]].
+  /** Apply a multi-key txn log to `initialState` (key, value): returns
+    * (final state (key, value), per-txn results (txnId, succeeded),
+    * [[MkStats]]). The unit of work of one streaming micro-batch (see
+    * [[MultiKeyStream]]); a batch job starts from an empty state.
     *
     * Architecture: conflict COMPONENTS first, barriers only as fallback.
     * Consecutive txns on a key conflict; the connected components of that
@@ -486,11 +369,13 @@ object TxnEngine {
     * applied one barrier per conflict level with bounded per-task memory.
     * Results are identical either way (spec-enforced).
     */
-  def applyMultiKeyStats(initialState: DataFrame, txns: Dataset[Txn])
+  def applyMultiKey(initialState: DataFrame, txns: Dataset[Txn])
       : (DataFrame, DataFrame, MkStats) =
     applyMultiKeyCapped(initialState, txns, FoldComponentCap)
 
-  /** [[applyMultiKeyStats]] with an injectable fold cap (spec seam).
+  /** [[applyMultiKey]] with an injectable fold cap (spec seam). Cap 0
+    * folds nothing: any conflict edge or any keyed txn sends the batch
+    * generational.
     *
     * Dispatch, census and labels all come from ONE driver union-find over
     * the conflict edges, gated by the edge count. STAR edges connect every
@@ -611,23 +496,18 @@ object TxnEngine {
     * Hot-key posture (the reference's per-key lock-waiter queues,
     * StreamyDb.scala:66-129, let a hot key's chain drain without blocking
     * other keys): single-key-only txns never occupy scheduler rounds.
-    * Scheduling runs ONCE up front in O(log conflict-depth) distributed
-    * passes ([[generationsCounted]] over the multi-key txns' metadata,
-    * plus one window assigning every single-key txn to the phase right
-    * after the last multi-key txn preceding it on its key). Each apply
-    * phase then (a) FOLDS that phase's single-key runs — one distributed
-    * `cogroup` over (state, txns) per key, applying a whole consecutive
-    * run in txnId order in one pass — and (b) applies the conflict-free
-    * multi-key generation via join-gate-merge against the post-fold
-    * state. Per-phase work is at most TWO materializations (the fold and
+    * Scheduling runs ONCE up front ([[generations]] over the multi-key
+    * txns' metadata, plus one window assigning every single-key txn to
+    * the phase right after the last multi-key txn preceding it on its
+    * key). Each apply phase then (a) FOLDS that phase's single-key runs
+    * — one distributed `cogroup` over (state, txns) per key, applying a
+    * whole consecutive run in txnId order in one pass — and (b) applies
+    * the conflict-free multi-key generation via join-gate-merge against
+    * the post-fold state. Per-phase work is at most TWO materializations (the fold and
     * the state merge); per-txn results stay lazy against checkpointed
     * inputs and union in batches. Phases count the multi-key conflict
     * depth only: a 1,000-txn single-hot-key log folds in ONE phase.
     */
-  private[graft] def applyMultiKeyGenerational(initialState: DataFrame,
-      txns: Dataset[Txn]): (DataFrame, DataFrame, MkStats) =
-    applyGenerations(initialState, txns.localCheckpoint(true))
-
   private def applyGenerations(initialState: DataFrame, tds: Dataset[Txn])
       : (DataFrame, DataFrame, MkStats) = {
     val spark = tds.sparkSession
@@ -658,35 +538,26 @@ object TxnEngine {
 
     // ---- scheduling: metadata-only passes ----
     val (mGens, schedPasses) = timedStage("scheduling")(
-      generationsCounted(keyed.filter(col("is_multi")).select(col("txn_id"), col("key"))))
+      generations(keyed.filter(col("is_multi")).select(col("txn_id"), col("key"))))
     val gens = timedStage("gens-ck")(mGens.materialize)
     // a single-key txn folds in the phase after the last multi-key txn
     // preceding it on its key (phase 0 if none); each phase's fold applies
     // the whole single-key run between two multis in one cogroup pass.
     // An all-multi batch (a8's adversarial shape) skips the whole
-    // corpus-sized window: the phase assignment only exists for singles.
+    // corpus-sized window: the phase assignment only exists for singles,
+    // so it is built on first use, which only a batch with singles makes.
     val anySingles = timedStage("singles-exist")(
       !keyed.filter(!col("is_multi")).isEmpty)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("txn_id"))
-    val singlesPhase = timedStage("singles-phase")(
-      if (!anySingles)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("txn_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("key",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("ph",
-              org.apache.spark.sql.types.IntegerType))))
-      else keyed
-        .join(gens, Seq("txn_id"), "left_outer")
-        .withColumn("ph",
-          coalesce(last(when(col("is_multi"), col("gen")), ignoreNulls = true)
-            .over(w) + 1, lit(0)))
-        .filter(!col("is_multi"))
-        .select(col("txn_id"), col("key"), col("ph"))
-        .materialize)
+    lazy val singlesPhase = timedStage("singles-phase")(keyed
+      .join(gens, Seq("txn_id"), "left_outer")
+      .withColumn("ph",
+        coalesce(last(when(col("is_multi"), col("gen")), ignoreNulls = true)
+          .over(w) + 1, lit(0)))
+      .filter(!col("is_multi"))
+      .select(col("txn_id"), col("key"), col("ph"))
+      .materialize)
     // driver-bounded scheduling scalars: the phase count and which phases
     // fold singles — O(#phases), never the txn set
     val maxMultiGen = timedStage("sched-scalars") {
@@ -777,20 +648,12 @@ object TxnEngine {
       MkStats(phase, schedPasses))
   }
 
-  /** Seq-input convenience (specs): collects only the per-txn results. */
-  def applyMultiKey(spark: SparkSession, txns: Seq[Txn])
-      : (DataFrame, Seq[MkResult]) = {
-    import spark.implicits._
-    val (state, results) = applyMultiKey(txns.toDS())
-    (state, results.as[MkResult].collect().toSeq)
-  }
-
   /** Streaming multi-key Calvin: the Structured-Streaming analog of the
     * reference's Kafka feedback loop (StreamyDb.scala:177-242 — results
     * re-entering as per-key apply/release messages). There the loop runs
     * between operators of one dataflow; here it runs between micro-batches:
     * each batch of txns goes through the fused scheduler/apply rounds
-    * ([[applyMultiKeyFrom]]) against the distributed state carried from
+    * ([[applyMultiKey]]) against the distributed state carried from
     * all previous batches. Feeding batches in txnId order reproduces the
     * deterministic sequential semantics (proved by the spec oracle).
     *
@@ -846,7 +709,7 @@ object TxnEngine {
 
     def processBatch(batch: Dataset[Txn], batchId: Long): Unit = {
       if (batchId <= lastCommitted) return // replay after restart: done
-      val (st, res) = applyMultiKeyFrom(stateDf, batch)
+      val (st, res, _) = applyMultiKey(stateDf, batch)
       checkpointDir match {
         case Some(dir) =>
           st.write.mode("overwrite").parquet(s"$dir/state/$batchId")

@@ -11,12 +11,10 @@ import org.apache.spark.sql.functions._
   *   - componentsOf collects edges ONLY under LocalComponentsMaxEdges
   *     (4M edges x 16 B = 64 MB); past it, labels are pointer-doubled
   *     distributed rounds and the driver holds convergence scalars.
-  *   - applyMultiKeyStats folds components only when the largest stays
+  *   - applyMultiKey folds components only when the largest stays
   *     under FoldComponentCap (4M txns); past it, the generational path
   *     runs, whose driver state is the phase count + which phases fold
   *     singles (O(#phases) ints).
-  *   - generationsCounted's path doubling bails to label relaxation past
-  *     MaxClosurePairs (2M pairs) — its driver state is two longs.
   * The probe generates a workload that exceeds the caps (5M two-key
   * txns over a shared key domain -> one giant conflict component) and
   * records edges, component census, path, passes, wall time, and the
@@ -46,7 +44,7 @@ import org.apache.spark.sql.functions._
   * apply joins + state checkpoint, merge_ms = the deferred result-union
   * materializations; residual = the PRE-LOOP scheduling + metadata:
   * workload checkpoint, keyed/asserts/updates materializations,
-  * componentsOf pointer-doubling, generationsCounted passes):
+  * componentsOf pointer-doubling, generation-scheduler passes):
   *
   *   | txns | phases | wall s | phase-loop ck | merges | pre-loop |
   *   |------|--------|--------|---------------|--------|----------|
@@ -171,7 +169,7 @@ object A8ScaleProbe {
     val empty = Seq.empty[(String, String)].toDF("key", "value")
     println(s"txns: $n  keyDomain: $keyDomain")
     val t0 = System.nanoTime()
-    val (state, results, stats) = TxnEngine.applyMultiKeyStats(empty, txns)
+    val (state, results, stats) = TxnEngine.applyMultiKey(empty, txns)
     val nState = state.count()
     val nRes = results.count()
     val sec = (System.nanoTime() - t0) / 1e9

@@ -86,53 +86,6 @@ class Round16Spec extends AnyFunSuite {
     assert(viaGate == truth)
   }
 
-  test("generations gate dispatches on distinct keys, not rows alone") {
-    import s.implicits._
-    import streaming.TxnEngine
-    // all-unique-key batch: rows pass the row cap but the key-map bound
-    // must push it to the distributed path (which sees zero conflict
-    // edges and converges in 0 passes); with both caps open the
-    // sequential scan takes it (1 pass). Same (trivial) generations.
-    val df = (0 until 100).map(i => (i.toLong, s"u$i")).toDF("txn_id", "key")
-    def toMap(r: (org.apache.spark.sql.DataFrame, Int)) =
-      (r._1.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap, r._2)
-    val (seqGens, seqPasses) = toMap(TxnEngine.generationsGated(df, 1000L, 1000L))
-    val (distGens, distPasses) = toMap(TxnEngine.generationsGated(df, 1000L, 10L))
-    assert(seqPasses == 1 && distPasses == 0,
-      s"gate did not dispatch: seq=$seqPasses dist=$distPasses")
-    assert(seqGens == distGens && seqGens.values.forall(_ == 0))
-  }
-
-  test("sequential generations match the distributed scheduler exactly") {
-    import s.implicits._
-    import streaming.TxnEngine
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    // the three pinned shapes (ladder / hot chain / bridged runs) plus a
-    // random multi-key batch, each checked against BOTH distributed paths
-    val ladder = (0 until 40).flatMap(i =>
-      Seq((i.toLong, s"c$i"), (i.toLong, s"c${i + 1}")))
-    val hot = (0 until 50).map(i => (i.toLong, "hot"))
-    val rnd = new scala.util.Random(7)
-    val random = (0 until 400).flatMap(i =>
-      Seq((i.toLong, s"k${rnd.nextInt(60)}"), (i.toLong, s"k${rnd.nextInt(60)}")))
-    for ((name, rows) <- Seq(("ladder", ladder), ("hot", hot),
-        ("random", random))) {
-      val df = rows.toDF("txn_id", "key")
-      val seq = toMap(TxnEngine.sequentialGenerations(df))
-      val doubled = toMap(TxnEngine.generationsCounted(df,
-        TxnEngine.MaxClosurePairs)._1)
-      val relaxed = toMap(TxnEngine.generationsCounted(df, 10L)._1)
-      assert(seq == doubled, s"$name: seq != doubled")
-      assert(seq == relaxed, s"$name: seq != relaxed")
-    }
-    // duplicate incidence rows must not inflate generations
-    val dup = Seq((0L, "a"), (0L, "a"), (1L, "a"), (1L, "a"))
-      .toDF("txn_id", "key")
-    assert(toMap(TxnEngine.sequentialGenerations(dup)) ==
-      Map(0L -> 0, 1L -> 1))
-  }
-
   test("q49 plans with NO fact exchange (bucketed facts, dims pruned first)") {
     val df = operators.Relational.q49(s, TestSpark.sf)
     df.count() // finalize the AQE tree

@@ -23,10 +23,37 @@ class TxnEngineSpec extends AnyFunSuite {
     }
   }
 
+  private def emptyState: org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    Seq.empty[(String, String)].toDF("key", "value")
+  }
+
+  /** [[TxnEngine.applyMultiKey]] from an empty state, results collected. */
+  private def applyCollected(txns: Seq[Txn])
+      : (org.apache.spark.sql.DataFrame, Seq[MkResult]) = {
+    import s.implicits._
+    val (state, results, _) = TxnEngine.applyMultiKey(emptyState, txns.toDS())
+    (state, results.as[MkResult].collect().toSeq)
+  }
+
+  /** Txns grouped by [[TxnEngine.generations]], in generation order. */
+  private def generationsOf(txns: Seq[Txn]): Seq[Seq[Txn]] = {
+    import s.implicits._
+    val keys = txns.flatMap(t =>
+      (t.asserts ++ t.updates).map(kv => (t.txnId, kv.key))).distinct
+    val byGen = TxnEngine.generations(keys.toDF("txn_id", "key"))._1
+      .as[(Long, Int)].collect().groupBy(_._2)
+    val byId = txns.map(t => t.txnId -> t).toMap
+    (0 until byGen.size).map(g => byGen(g).map(r => byId(r._1)).toSeq.sortBy(_.txnId))
+  }
+
+  private def gensMap(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
+    df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+
   test("multi-key generation scheduler matches the sequential oracle") {
     for (seed <- Seq(1L, 7L, 42L)) {
       val txns = randomTxns(seed, 60, 8)
-      val (stateDf, results) = TxnEngine.applyMultiKey(s, txns)
+      val (stateDf, results) = applyCollected(txns)
       val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
       assert(results.sortBy(_.txnId) == oracleResults.sortBy(_.txnId),
         s"results diverge for seed=$seed")
@@ -37,7 +64,7 @@ class TxnEngineSpec extends AnyFunSuite {
 
   test("generations never reuse a key within a round and respect txn order") {
     val txns = randomTxns(3L, 40, 5)
-    val gens = TxnEngine.generations(s, txns)
+    val gens = generationsOf(txns)
     gens.foreach { g =>
       val ks = g.flatMap(t => (t.asserts ++ t.updates).map(_.key).distinct)
       assert(ks.distinct.size == ks.size, "key conflict within a generation")
@@ -61,8 +88,8 @@ class TxnEngineSpec extends AnyFunSuite {
         asserts = Seq(KeyValueOption("hot", if (i == 0) None else Some((i - 1).toString))),
         updates = Seq(KeyValueOption("hot", Some(i.toString))))
     }
-    val (stateDf, resultsDf, phases) = TxnEngine.applyMultiKeyCounted(
-      Seq.empty[(String, String)].toDF("key", "value"), txns.toDS())
+    val (stateDf, resultsDf, stats) = TxnEngine.applyMultiKey(emptyState, txns.toDS())
+    val phases = stats.applyPhases
     val results = resultsDf.as[MkResult].collect().toSeq
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
     assert(results.sortBy(_.txnId) == oracleResults.sortBy(_.txnId))
@@ -86,8 +113,8 @@ class TxnEngineSpec extends AnyFunSuite {
           KeyValueOption(s"side$j", Some(s"s$j"))))
     }
     val txns = (singles ++ multis).sortBy(_.txnId)
-    val (stateDf, resultsDf, phases) = TxnEngine.applyMultiKeyCounted(
-      Seq.empty[(String, String)].toDF("key", "value"), txns.toDS())
+    val (stateDf, resultsDf, stats) = TxnEngine.applyMultiKey(emptyState, txns.toDS())
+    val phases = stats.applyPhases
     val results = resultsDf.as[MkResult].collect().toSeq
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
     assert(results.sortBy(_.txnId) == oracleResults.sortBy(_.txnId))
@@ -109,8 +136,7 @@ class TxnEngineSpec extends AnyFunSuite {
         updates = Seq(KeyValueOption(s"c$i", Some(s"v$i")),
           KeyValueOption(s"c${i + 1}", Some(s"v$i"))))
     }
-    val (stateDf, resultsDf, stats) = TxnEngine.applyMultiKeyStats(
-      Seq.empty[(String, String)].toDF("key", "value"), txns.toDS())
+    val (stateDf, resultsDf, stats) = TxnEngine.applyMultiKey(emptyState, txns.toDS())
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
     assert(resultsDf.as[MkResult].collect().toSeq.sortBy(_.txnId)
       == oracleResults.sortBy(_.txnId))
@@ -124,12 +150,12 @@ class TxnEngineSpec extends AnyFunSuite {
     info(s"applyPhases=${stats.applyPhases} components=${stats.foldedComponents}")
   }
 
-  test("generational fallback: 100-deep chain in depth barriers, log-bounded scheduling") {
+  test("generational fallback: 100-deep chain in depth barriers, one scheduling scan") {
     import s.implicits._
-    // same chain, forced down the over-cap fallback path: application is
-    // semantically sequential (100 apply phases), but SCHEDULING must
-    // resolve in ~log2(100) pointer-doubled passes, not 100 ready-set
-    // rounds — and results must match the fold path bit-for-bit.
+    // same chain, forced down the generational path by a zero fold cap:
+    // application is semantically sequential (100 apply phases), but its
+    // 200 incidence rows SCHEDULE in one sorted scan, not 100 ready-set
+    // rounds — and results must match the sequential oracle.
     val txns = (0 until 100).map { i =>
       Txn(i.toLong,
         asserts = if (i == 0) Seq.empty
@@ -137,8 +163,8 @@ class TxnEngineSpec extends AnyFunSuite {
         updates = Seq(KeyValueOption(s"c$i", Some(s"v$i")),
           KeyValueOption(s"c${i + 1}", Some(s"v$i"))))
     }
-    val (stateDf, resultsDf, stats) = TxnEngine.applyMultiKeyGenerational(
-      Seq.empty[(String, String)].toDF("key", "value"), txns.toDS())
+    val (stateDf, resultsDf, stats) =
+      TxnEngine.applyMultiKeyCapped(emptyState, txns.toDS(), 0L)
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
     assert(resultsDf.as[MkResult].collect().toSeq.sortBy(_.txnId)
       == oracleResults.sortBy(_.txnId))
@@ -146,8 +172,7 @@ class TxnEngineSpec extends AnyFunSuite {
       == oracleState)
     assert(stats.applyPhases == 100,
       s"expected 100 sequential apply phases, got ${stats.applyPhases}")
-    // ceil(log2(99)) = 7 doubling passes + 1 convergence-verification pass
-    assert(stats.schedulerPasses <= 9,
+    assert(stats.schedulerPasses == 1,
       s"scheduling took ${stats.schedulerPasses} passes for a 100-deep chain")
     info(s"applyPhases=${stats.applyPhases} schedulerPasses=${stats.schedulerPasses}")
   }
@@ -173,9 +198,8 @@ class TxnEngineSpec extends AnyFunSuite {
         else Seq(KeyValueOption(k1, Some(s"v$i")))
       Txn(i.toLong, if (updates.isEmpty) Seq.empty else asserts, updates)
     }
-    val empty = Seq.empty[(String, String)].toDF("key", "value")
-    val (stF, resF, statsF) = TxnEngine.applyMultiKeyStats(empty, txns.toDS())
-    val (stG, resG, _) = TxnEngine.applyMultiKeyGenerational(empty, txns.toDS())
+    val (stF, resF, statsF) = TxnEngine.applyMultiKey(emptyState, txns.toDS())
+    val (stG, resG, _) = TxnEngine.applyMultiKeyCapped(emptyState, txns.toDS(), 0L)
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
     assert(statsF.applyPhases == 1, "mixed workload must take the fold path")
     val rF = resF.as[MkResult].collect().toSeq.sortBy(_.txnId)
@@ -188,56 +212,81 @@ class TxnEngineSpec extends AnyFunSuite {
     assert(sG == sF, "generational and fold state diverge")
   }
 
-  test("scheduler bails from path doubling to label relaxation past the pair cap") {
-    import s.implicits._
-    // same chain shape as above at depth 40: the max-plus closure holds
-    // O(depth^2) pairs, so a tiny cap forces the relaxation fallback.
-    // Generations must be identical either way; only the pass count
-    // changes shape. This c_i/c_{i+1} ladder is chain relaxation's WORST
-    // case — every edge switches key, so it degrades to one level per
-    // pass (the old edge-relaxation bound).
-    val txnKeys = (0 until 40).flatMap(i =>
-      Seq((i.toLong, s"c$i"), (i.toLong, s"c${i + 1}")))
-      .toDF("txn_id", "key")
-    val (gensDoubled, passesDoubled) =
-      TxnEngine.generationsCounted(txnKeys, TxnEngine.MaxClosurePairs)
-    val (gensRelaxed, passesRelaxed) =
-      TxnEngine.generationsCounted(txnKeys, 10L)
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val expected = (0 until 40).map(i => i.toLong -> i).toMap
-    assert(toMap(gensDoubled) == expected)
-    assert(toMap(gensRelaxed) == expected)
-    assert(passesDoubled <= 8,
-      s"doubling took $passesDoubled passes for a 40-deep chain")
-    // relaxation advances one conflict level per pass (+ the capped
-    // doubling probes it started with + 1 convergence check)
-    assert(passesRelaxed >= 40 && passesRelaxed <= 45,
-      s"relaxation took $passesRelaxed passes for a 40-deep chain")
-    info(s"doubled=$passesDoubled relaxed=$passesRelaxed")
-  }
-
   test("chain relaxation resolves long per-key runs in one pass, not one per level") {
     import s.implicits._
+    // zero gates force the distributed scheduler on these tiny batches
+    def relaxed(df: org.apache.spark.sql.DataFrame) =
+      TxnEngine.generationsGated(df, 0L, 0L)
     // (a) one 50-txn chain on a single hot key: depth 49, but the whole
     // chain is ONE window prefix-max — the fallback must converge in
-    // ~2 passes, not ~50 (r15: passes track key switches, not depth)
+    // ~2 passes, not ~50 (passes track key switches, not depth)
     val hot = (0 until 50).map(i => (i.toLong, "hot")).toDF("txn_id", "key")
-    val (gensHot, passesHot) = TxnEngine.generationsCounted(hot, 10L)
-    assert(gensHot.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      == (0 until 50).map(i => i.toLong -> i).toMap)
+    val (gensHot, passesHot) = relaxed(hot)
+    assert(gensMap(gensHot) == (0 until 50).map(i => i.toLong -> i).toMap)
     assert(passesHot <= 4,
       s"single-chain fallback took $passesHot passes (depth-bounded again?)")
     // (b) two 15-txn runs bridged by one shared txn: depth 29 with ONE
     // key switch on the critical path — a few passes, not ~30
     val twoRuns = ((0 to 14).map(i => (i.toLong, "a")) ++
       (14 to 29).map(i => (i.toLong, "b"))).toDF("txn_id", "key")
-    val (gensTwo, passesTwo) = TxnEngine.generationsCounted(twoRuns, 10L)
-    val m = gensTwo.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val (gensTwo, passesTwo) = relaxed(twoRuns)
+    val m = gensMap(gensTwo)
     assert(m(14) == 14 && m(29) == 29, s"wrong depths: ${m(14)}, ${m(29)}")
     assert(passesTwo <= 5,
       s"two-segment fallback took $passesTwo passes")
-    info(s"hot=$passesHot twoRuns=$passesTwo")
+    // (c) the c_i/c_{i+1} ladder at depth 40 is chain relaxation's WORST
+    // case — every edge switches key, so it degrades to one level per
+    // pass (+ 1 convergence check)
+    val ladder = (0 until 40).flatMap(i =>
+      Seq((i.toLong, s"c$i"), (i.toLong, s"c${i + 1}")))
+      .toDF("txn_id", "key")
+    val (gensLadder, passesLadder) = relaxed(ladder)
+    assert(gensMap(gensLadder) == (0 until 40).map(i => i.toLong -> i).toMap)
+    assert(passesLadder >= 40 && passesLadder <= 45,
+      s"relaxation took $passesLadder passes for a 40-deep chain")
+    info(s"hot=$passesHot twoRuns=$passesTwo ladder=$passesLadder")
+  }
+
+  test("generations gate dispatches on distinct keys, not rows alone") {
+    import s.implicits._
+    // 100 unique-key txns plus a 10-txn run on one hot key: rows pass the
+    // row cap but the key-map bound must push the batch to the
+    // distributed path (the hot run resolves in one relaxation pass, a
+    // second confirms it: 2 passes); with both caps open the sequential
+    // scan takes it (1 pass). Same generations either way.
+    val df = ((0 until 100).map(i => (i.toLong, s"u$i")) ++
+      (100 until 110).map(i => (i.toLong, "hot"))).toDF("txn_id", "key")
+    val (seqGens, seqPasses) = TxnEngine.generationsGated(df, 1000L, 1000L)
+    val (distGens, distPasses) = TxnEngine.generationsGated(df, 1000L, 10L)
+    assert(seqPasses == 1 && distPasses == 2,
+      s"gate did not dispatch: seq=$seqPasses dist=$distPasses")
+    val expected = (0 until 100).map(i => i.toLong -> 0).toMap ++
+      (100 until 110).map(i => i.toLong -> (i - 100)).toMap
+    assert(gensMap(seqGens) == expected && gensMap(distGens) == expected)
+  }
+
+  test("sequential generations match the distributed scheduler exactly") {
+    import s.implicits._
+    // the three pinned shapes (ladder / hot chain / bridged runs) plus a
+    // random multi-key batch, each checked against chain relaxation
+    val ladder = (0 until 40).flatMap(i =>
+      Seq((i.toLong, s"c$i"), (i.toLong, s"c${i + 1}")))
+    val hot = (0 until 50).map(i => (i.toLong, "hot"))
+    val rnd = new scala.util.Random(7)
+    val random = (0 until 400).flatMap(i =>
+      Seq((i.toLong, s"k${rnd.nextInt(60)}"), (i.toLong, s"k${rnd.nextInt(60)}")))
+    for ((name, rows) <- Seq(("ladder", ladder), ("hot", hot),
+        ("random", random))) {
+      val df = rows.toDF("txn_id", "key")
+      val seq = gensMap(TxnEngine.sequentialGenerations(df))
+      val relaxed = gensMap(TxnEngine.generationsGated(df, 0L, 0L)._1)
+      assert(seq == relaxed, s"$name: seq != relaxed")
+    }
+    // duplicate incidence rows must not inflate generations
+    val dup = Seq((0L, "a"), (0L, "a"), (1L, "a"), (1L, "a"))
+      .toDF("txn_id", "key")
+    assert(gensMap(TxnEngine.sequentialGenerations(dup)) ==
+      Map(0L -> 0, 1L -> 1))
   }
 
   test("multi-key stream recovers from its checkpoint after a kill/restart") {
@@ -324,7 +373,7 @@ class TxnEngineSpec extends AnyFunSuite {
       Txn(23L, Seq.empty, Seq.empty))
     val initial = TxnEngine.sequentialOracle(seed)._1.toSeq.toDF("key", "value")
     val (stateDf, resultsDf, stats) =
-      TxnEngine.applyMultiKeyStats(initial, batch.toDS())
+      TxnEngine.applyMultiKey(initial, batch.toDS())
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(seed ++ batch)
     assert(stats == MkStats(1, 0, 6L, 5L), s"census: $stats")
     assert(stateMap(stateDf) == oracleState)
@@ -332,13 +381,12 @@ class TxnEngineSpec extends AnyFunSuite {
       oracleResults.filter(_.txnId >= 10L))
     assert(!oracleResults.forall(_.succeeded), "setup: some asserts must fail")
 
-    val empty = Seq.empty[(String, String)].toDF("key", "value")
     val (_, noRes, noStats) =
-      TxnEngine.applyMultiKeyStats(initial, Seq.empty[Txn].toDS())
+      TxnEngine.applyMultiKey(initial, Seq.empty[Txn].toDS())
     assert(noStats == MkStats(1, 0, 0L, 0L) && noRes.isEmpty)
     val keyless = Seq(Txn(1L, Seq.empty, Seq.empty), Txn(2L, Seq.empty, Seq.empty))
     val (klState, klRes, klStats) =
-      TxnEngine.applyMultiKeyStats(empty, keyless.toDS())
+      TxnEngine.applyMultiKey(emptyState, keyless.toDS())
     assert(klStats == MkStats(1, 0, 0L, 0L), s"all-keyless census: $klStats")
     assert(klState.isEmpty)
     assert(klRes.as[MkResult].collect().toSeq.sortBy(_.txnId) ==
@@ -358,11 +406,10 @@ class TxnEngineSpec extends AnyFunSuite {
         updates = Seq(KeyValueOption(s"c$i", Some(s"v$i")),
           KeyValueOption(s"c${i + 1}", Some(s"v$i"))))
     }
-    val empty = Seq.empty[(String, String)].toDF("key", "value")
     for (n <- Seq(cap.toInt, cap.toInt + 1, cap.toInt + 2)) {
       val txns = chain(n)
       val (stateDf, resultsDf, stats) =
-        TxnEngine.applyMultiKeyCapped(empty, txns.toDS(), cap)
+        TxnEngine.applyMultiKeyCapped(emptyState, txns.toDS(), cap)
       val expected =
         if (n <= cap) MkStats(1, 0, 1L, n.toLong)
         else MkStats(n, stats.schedulerPasses)
@@ -376,7 +423,7 @@ class TxnEngineSpec extends AnyFunSuite {
 
   test("a8 multi-key workload matches the sequential oracle") {
     val txns = TxnQueries.multiKeyWorkload(s, d)
-    val (stateDf, results) = TxnEngine.applyMultiKey(s, txns)
+    val (stateDf, results) = applyCollected(txns)
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
     assert(results.sortBy(_.txnId) == oracleResults.sortBy(_.txnId))
     val got = stateDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
@@ -387,7 +434,7 @@ class TxnEngineSpec extends AnyFunSuite {
     // same shape as the reference's TransactionGenerator: assert-absent on
     // k keys, then write key_value — first txn touching a key wins
     val txns = graft.streaming.TxnGenerator.generate(40, 3, numKeys = 30, seed = 9L)
-    val (stateDf, results) = TxnEngine.applyMultiKey(s, txns)
+    val (stateDf, results) = applyCollected(txns)
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
     assert(results.sortBy(_.txnId) == oracleResults.sortBy(_.txnId))
     assert(stateDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
