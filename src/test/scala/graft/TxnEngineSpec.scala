@@ -212,6 +212,29 @@ class TxnEngineSpec extends AnyFunSuite {
     assert(sG == sF, "generational and fold state diverge")
   }
 
+  test("scheduler bails from path doubling to label relaxation past the pair cap") {
+    import s.implicits._
+    // Path doubling and its closure-pair cap are gone: past the row/key
+    // gates the scheduler goes straight to label relaxation, so zero gates
+    // stand in for the old tiny pair cap. The c_i/c_{i+1} ladder at depth
+    // 40 is chain relaxation's WORST case — every edge switches key, so it
+    // degrades to one level per pass (+ 1 convergence check). Under the
+    // default gates the sequential scan takes the same batch in one pass;
+    // the generations must be identical either way.
+    val ladder = (0 until 40).flatMap(i =>
+      Seq((i.toLong, s"c$i"), (i.toLong, s"c${i + 1}")))
+      .toDF("txn_id", "key")
+    val (gensScan, passesScan) = TxnEngine.generations(ladder)
+    val (gensRelaxed, passesRelaxed) = TxnEngine.generationsGated(ladder, 0L, 0L)
+    val expected = (0 until 40).map(i => i.toLong -> i).toMap
+    assert(gensMap(gensScan) == expected)
+    assert(gensMap(gensRelaxed) == expected)
+    assert(passesScan == 1, s"sequential scan took $passesScan passes")
+    assert(passesRelaxed >= 40 && passesRelaxed <= 45,
+      s"relaxation took $passesRelaxed passes for a 40-deep chain")
+    info(s"scan=$passesScan relaxed=$passesRelaxed")
+  }
+
   test("chain relaxation resolves long per-key runs in one pass, not one per level") {
     import s.implicits._
     // zero gates force the distributed scheduler on these tiny batches
@@ -234,17 +257,7 @@ class TxnEngineSpec extends AnyFunSuite {
     assert(m(14) == 14 && m(29) == 29, s"wrong depths: ${m(14)}, ${m(29)}")
     assert(passesTwo <= 5,
       s"two-segment fallback took $passesTwo passes")
-    // (c) the c_i/c_{i+1} ladder at depth 40 is chain relaxation's WORST
-    // case — every edge switches key, so it degrades to one level per
-    // pass (+ 1 convergence check)
-    val ladder = (0 until 40).flatMap(i =>
-      Seq((i.toLong, s"c$i"), (i.toLong, s"c${i + 1}")))
-      .toDF("txn_id", "key")
-    val (gensLadder, passesLadder) = relaxed(ladder)
-    assert(gensMap(gensLadder) == (0 until 40).map(i => i.toLong -> i).toMap)
-    assert(passesLadder >= 40 && passesLadder <= 45,
-      s"relaxation took $passesLadder passes for a 40-deep chain")
-    info(s"hot=$passesHot twoRuns=$passesTwo ladder=$passesLadder")
+    info(s"hot=$passesHot twoRuns=$passesTwo")
   }
 
   test("generations gate dispatches on distinct keys, not rows alone") {
