@@ -205,8 +205,8 @@ object Bench {
     // workload's component census (the fold path's parallelism dimension)
     // plus a synthetic single-hot-key conflict chain — one deep component,
     // whose wall time is the sequential-fold floor a pathological
-    // micro-batch pays (the generational fallback's per-barrier cost is
-    // spec-tracked, not benched: it only runs past the component cap)
+    // micro-batch pays (a batch past the component cap applies in txnId
+    // ranges of the same fold; specs cover that split, the bench does not)
     val txnStats = if (!sections("txn")) "" else {
       import spark.implicits._
       val wl = operators.TxnQueries.multiKeyWorkloadDS(spark, sfDir)

@@ -241,8 +241,9 @@ object TxnQueries {
     multiKeyWorkloadDS(s, dir).collect().sortBy(_.txnId).toSeq
 
   /** a8: multi-key Calvin — [[TxnEngine.applyMultiKey]] from an empty
-    * state (conflict components fold in parallel; an over-cap component
-    * sends the batch to generation-scheduled rounds). Hash-gated by
+    * state (conflict components fold in parallel; a batch with an
+    * over-cap component applies in consecutive txnId ranges, each through
+    * the same fold). Hash-gated by
     * [[a8Sql]]'s recursive-CTE interpreter and spec-verified against the
     * sequential interpreter.
     */
@@ -260,7 +261,8 @@ object TxnQueries {
     * unmapped; commits overwrite both keys (the event key is deleted when
     * v % 5 = 0, matching [[multiKeyWorkloadDS]]). Gate-scale only — the
     * state column is O(keyspace) per step, which is exactly why the
-    * engine itself schedules generations instead of folding sequentially.
+    * engine folds each conflict component in its own task instead of the
+    * whole log in one.
     */
   val a8Sql: String = s"""
     WITH RECURSIVE mk AS (

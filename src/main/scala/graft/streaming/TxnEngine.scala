@@ -38,36 +38,18 @@ final case class FoldEmit(kind: Int, txnId: Long, key: String,
   *  - multi-key transactions, one entry point ([[applyMultiKey]]): txns
   *    that share a key (transitively) form a conflict component, and each
   *    component folds sequentially in txnId order inside one task — all
-  *    components in parallel, one distributed pass. A batch whose largest
-  *    component is over [[FoldComponentCap]] falls back to Calvin's
-  *    logically centralized scheduler: the txn *metadata* (id → keys) is
-  *    scheduled into conflict-free generations ([[generations]]: one
-  *    sorted scan, since txnId order is topological; distributed chain
-  *    relaxation past its size gates), and each generation's
-  *    asserts/updates are evaluated distributed (join state on key →
-  *    all-asserts gate → merge updates), one barrier per conflict level.
+  *    components in parallel, one distributed pass. A batch too big for
+  *    one fold (a component over [[FoldComponentCap]], or more conflict
+  *    edges than the driver union-find takes) splits at its middle txnId,
+  *    and the two ranges apply one after the other, the second from the
+  *    state the first produced. txnId is the one total order, so applying
+  *    consecutive ranges in order is applying the batch — the argument
+  *    that already makes [[MultiKeyStream]]'s micro-batches correct.
   */
 object TxnEngine {
 
   type Key = String
   type Value = String
-
-  /** Per-phase scheduler diagnostics (dev): set SPARK_GRAFT_MK_DEBUG=1. */
-  private val Debug = sys.env.get("SPARK_GRAFT_MK_DEBUG").contains("1")
-
-  /** Debug-gated pre-loop stage timer ([mk-pre] lines): the r14/r15
-    * A8ScaleProbe decompositions showed the PRE-loop is ~2/3 of the a8
-    * wall; these name its terms so the lever is measured, not guessed.
-    */
-  private def timedStage[T](stage: String)(f: => T): T = {
-    if (!Debug) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[mk-pre] stage=$stage%-16s ms=${(System.nanoTime() - t0) / 1e6}%10.1f")
-      r
-    }
-  }
 
   /** Single-key transaction: one assert + one update on `key`.
     * `assertPresent=false` with null `assertValue` means "expect absent";
@@ -154,184 +136,22 @@ object TxnEngine {
       valueAfter: Value)
 
   // ---------------------------------------------------------------------
-  // Multi-key: generation scheduling + distributed application
+  // Multi-key: conflict-component fold, split by txnId range past the cap
   // ---------------------------------------------------------------------
 
-  /** Conflict-layer ("generation") assignment over (txn_id, key) metadata
-    * rows: returns ((txn_id, gen), scheduling passes). A txn's generation
-    * is its longest-path depth in the conflict DAG whose edges connect
-    * consecutive txns on each key: exactly the partial order the
-    * reference's per-key lock-waiter queues drain without global
-    * synchronization (StreamyDb.scala:66-129).
-    *
-    * Conflict edges always point from a smaller txnId to a larger one,
-    * so txnId order is topological. Under [[SeqScheduleMaxRows]] and
-    * [[SeqScheduleMaxKeys]] ONE sorted scan resolves every generation
-    * ([[sequentialGenerations]], 1 pass); past either gate the batch is
-    * cluster-sized and [[chainRelaxGenerations]] schedules it in
-    * distributed passes with O(n) state. The txn *data* never enters the
-    * scheduler.
-    */
-  def generations(txnKeys: DataFrame): (DataFrame, Int) =
-    generationsGated(txnKeys, SeqScheduleMaxRows, SeqScheduleMaxKeys)
-
-  /** [[generations]] with injectable caps (spec seam). One scan
-    * decides the dispatch: rows bound the single task's sort volume,
-    * DISTINCT keys bound its heap (the key→gen map) — gating on rows
-    * alone would admit a 64M-row all-unique-key batch whose map would
-    * hold ~6 GB in one task. The ±2% HLL error is noise against the 2×
-    * headroom in the key cap.
-    */
-  private[graft] def generationsGated(txnKeys: DataFrame, maxRows: Long,
-      maxKeys: Long): (DataFrame, Int) = {
-    val gate = txnKeys.agg(
-      count(lit(1)), approx_count_distinct(col("key"))).head()
-    if (gate.getLong(0) <= maxRows && gate.getLong(1) <= maxKeys)
-      (sequentialGenerations(txnKeys), 1)
-    else chainRelaxGenerations(txnKeys)
-  }
-
-  /** Incidence-row ceiling for [[sequentialGenerations]]: 64M (txn, key)
-    * rows ≈ 1.5 GB through one task's external sort — minutes of one
-    * core, against the ~8 distributed relaxation passes it replaces
-    * (each shuffling the SAME rows twice). Capped so a genuinely
-    * cluster-sized batch falls back to the distributed passes.
-    */
-  val SeqScheduleMaxRows: Long = 64L * 1000 * 1000
-
-  /** Distinct-key ceiling for [[sequentialGenerations]]'s in-task
-    * key→generation map (~100 B per entry ⇒ ≤ ~1.6 GB — the a8 20M
-    * adversarial batch holds 8M keys ≈ 800 MB with 2× headroom under
-    * this cap). Gated alongside the row ceiling because the two bound
-    * different resources: rows the sort, keys the heap.
-    */
-  val SeqScheduleMaxKeys: Long = 16L * 1000 * 1000
-
-  /** EXACT longest-path generations in ONE sequential pass.
-    *
-    * Because txnId order is topological, the longest-path recurrence
-    * gen(t) = max over t's keys k of (gen(last txn on k) + 1) resolves
-    * left to right in a single scan — the same inherent serial order the
-    * apply loop's barriers respect, and the same order the reference's
-    * per-key waiter queues drain (reference StreamyDb.scala:66-129). The
-    * scan runs as ONE TASK (not on the driver): repartition(1) +
-    * in-partition sort by (txn_id, key), then a key→gen map carried
-    * through the iterator. 22 relaxation passes × two 40M-row shuffle
-    * legs each became one 40M-row shuffle + a linear scan on the 20M
-    * probe (A8ScaleProbe scaladoc r16 row).
-    *
-    * Adjacent duplicate (txn, key) rows are skipped in-scan, so callers
-    * need not pre-distinct.
-    */
-  private[graft] def sequentialGenerations(txnKeys: DataFrame): DataFrame = {
-    val spark = txnKeys.sparkSession
-    import spark.implicits._
-    txnKeys.select(col("txn_id"), col("key")).as[(Long, String)]
-      .repartition(1)
-      .sortWithinPartitions("txn_id", "key")
-      .mapPartitions { rows =>
-        val it = rows.buffered
-        val last = new java.util.HashMap[String, Integer]()
-        new Iterator[(Long, Int)] {
-          def hasNext: Boolean = it.hasNext
-          def next(): (Long, Int) = {
-            val id = it.head._1
-            var g = 0
-            val ks = new scala.collection.mutable.ArrayBuffer[String](4)
-            var prevKey: String = null
-            while (it.hasNext && it.head._1 == id) {
-              val k = it.next()._2
-              if (k != prevKey) { // sorted → dups are adjacent
-                prevKey = k
-                ks += k
-                val lg = last.get(k)
-                if (lg != null && lg + 1 > g) g = lg + 1
-              }
-            }
-            var i = 0
-            while (i < ks.length) { last.put(ks(i), g); i += 1 }
-            (id, g)
-          }
-        }
-      }
-      .toDF("txn_id", "gen")
-  }
-
-  /** Distributed scheduler: per-node longest-path labels by CHAIN
-    * relaxation. State is one (txn_id, gen) row per txn (O(n)); each
-    * pass joins the labels to the (txn_id, key, rank) incidence rows and
-    * takes a per-key window prefix-max — which propagates a label along
-    * an ENTIRE key chain in one pass, because the conflict edges within
-    * a key form a total order whose internal distances are known in
-    * closed form (rank difference): a predecessor u reaches t along the
-    * chain with exactly rank(t) − rank(u) edges, so
-    * cand(t) = max over preceding u of (gen(u) − rank(u)) + rank(t),
-    * a running max. Passes therefore track the number of KEY SWITCHES on
-    * the critical path, not its length (a8 20M probe: depth 33 resolves
-    * in 22 passes — the adversarial random graph's critical path
-    * switches keys on most hops, so the pass win there is modest; the
-    * structural win is on run-heavy logs, where a whole hot-key run
-    * costs ONE pass). Degenerate case (every edge switches key, e.g. a
-    * c_i/c_{i+1} ladder) falls back to one level per pass. Converges
-    * when the label sum stops moving (labels only grow, by ≥1 per
-    * unconverged pass); candidates are always realized by a genuine DAG
-    * path, so the fixed point is exactly the longest-path depth.
-    */
-  private def chainRelaxGenerations(txnKeys: DataFrame): (DataFrame, Int) = {
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("txn_id"))
-    val wChain = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("rank"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        -1)
-    // Both loop frames are hash-partitioned on txn_id and materialize
-    // PRESERVES that partitioning (LogicalRDD keeps outputPartitioning),
-    // so the two txn_id joins inside a pass plan with NO exchange: the
-    // only shuffles per pass are the per-key window sort and the
-    // cross-key groupBy.
-    val ranked = txnKeys.select(col("txn_id"), col("key")).distinct()
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .repartition(col("txn_id"))
-      .materialize
-    var gens = ranked.select(col("txn_id")).distinct()
-      .withColumn("gen", lit(0L)).materialize
-    var passes = 0
-    var prevSum = 0L
-    var converged = false
-    while (!converged) {
-      val relaxed = ranked.join(gens, "txn_id")
-        .withColumn("pm", max(col("gen") - col("rank")).over(wChain))
-        .filter(col("pm").isNotNull)
-        .select(col("txn_id"), (col("pm") + col("rank")).as("cand"))
-        .groupBy(col("txn_id")).agg(max(col("cand")).as("cand"))
-      val next = gens.join(relaxed, Seq("txn_id"), "left_outer")
-        .select(gens("txn_id"),
-          greatest(col("gen"), coalesce(col("cand"), lit(0L))).as("gen"))
-        .materialize
-      val curSum = next.agg(coalesce(sum(col("gen")), lit(0L))).head().getLong(0)
-      converged = curSum == prevSum
-      prevSum = curSum
-      gens = next
-      passes += 1
-    }
-    (gens.select(col("txn_id"), col("gen").cast("int").as("gen")), passes)
-  }
-
-  /** `applyPhases`/`schedulerPasses` describe the generational fallback
-    * (one barrier per conflict level / scheduling passes); the
-    * component-fold fast path reports applyPhases=1 plus the component
-    * census it folded (`foldedComponents`, `maxComponentTxns` over the
-    * keyed txns — 0/0 on the generational path and on a batch with no
+  /** What one multi-key apply did: `applyPhases` txnId ranges folded (1
+    * unless the batch split), and the conflict-component census over the
+    * keyed txns — `foldedComponents` summed over the ranges,
+    * `maxComponentTxns` the largest in any range (0/0 for a batch with no
     * keyed txn).
     */
-  final case class MkStats(applyPhases: Int, schedulerPasses: Int,
-      foldedComponents: Long = 0L, maxComponentTxns: Long = 0L)
+  final case class MkStats(applyPhases: Int, foldedComponents: Long,
+      maxComponentTxns: Long)
 
-  /** Txns-per-component cap for the in-memory component fold
-    * ([[applyMultiKey]]'s fast path): a batch whose largest conflict
-    * component exceeds this falls back to the generational rounds, whose
-    * memory stays bounded at one generation per barrier. Specs move it
-    * through [[applyMultiKeyCapped]]'s `cap`.
+  /** Txns-per-component cap for one component fold, and so the largest
+    * conflict component any fold task holds: a batch whose largest
+    * component exceeds it applies in txnId ranges that each fold under it
+    * ([[applyMultiKeyCapped]]). Specs move it through that seam's `cap`.
     */
   val FoldComponentCap: Long = 4L * 1000 * 1000
 
@@ -352,30 +172,29 @@ object TxnEngine {
     * [[MkStats]]). The unit of work of one streaming micro-batch (see
     * [[MultiKeyStream]]); a batch job starts from an empty state.
     *
-    * Architecture: conflict COMPONENTS first, barriers only as fallback.
+    * Architecture: conflict COMPONENTS, no per-depth barriers.
     * Consecutive txns on a key conflict; the connected components of that
     * relation are exactly the closures the reference's per-key lock-waiter
     * queues drain (StreamyDb.scala:66-129) — txns in different components
     * share no keys (directly or transitively), so components are
-    * independent. The fast path cogroups (txns, state) by component and
+    * independent. The fold cogroups (txns, state) by component and
     * folds each component sequentially in txnId order inside one task —
     * per-key pipelining with ZERO per-depth barriers; a depth-k conflict
     * chain costs one distributed pass, not k.
     *
     * A component's txns must fit one task (they fold sequentially — the
     * same inherent serialization the reference's waiter queue serializes
-    * on); if the largest component exceeds [[FoldComponentCap]] the batch
-    * takes the generational path instead: conflict-free generations
-    * applied one barrier per conflict level with bounded per-task memory.
-    * Results are identical either way (spec-enforced).
+    * on). A batch whose largest component exceeds [[FoldComponentCap]]
+    * applies in consecutive txnId ranges instead, each through this same
+    * fold ([[applyMultiKeyCapped]]). Results are identical either way
+    * (spec-enforced).
     */
   def applyMultiKey(initialState: DataFrame, txns: Dataset[Txn])
       : (DataFrame, DataFrame, MkStats) =
     applyMultiKeyCapped(initialState, txns, FoldComponentCap)
 
-  /** [[applyMultiKey]] with an injectable fold cap (spec seam). Cap 0
-    * folds nothing: any conflict edge or any keyed txn sends the batch
-    * generational.
+  /** [[applyMultiKey]] with an injectable fold cap (spec seam); `cap`
+    * must be at least 1.
     *
     * Dispatch, census and labels all come from ONE driver union-find over
     * the conflict edges, gated by the edge count. STAR edges connect every
@@ -383,29 +202,37 @@ object TxnEngine {
     * per-key chains, built by one window over the (txn, key) rows. A
     * component of k txns needs at least k−1 edges, so an edge count over
     * min(cap, LocalComponentsMaxEdges) proves a component over the cap
-    * and dispatches generational on size alone (round 16: distributed
-    * labeling of the 20M adversarial batch cost 280–554 s of metadata
-    * rounds, all of it for labels that over-cap dispatch then abandons).
-    * Under the gate the edge list fits the driver, and [[Dedup.unionFind]]
-    * gives every edge-induced txn its component root (the min txnId); a
-    * keyed txn on no edge is a component of one and labels itself. The census (component count and
-    * largest component) is read off that map, and txns and the state rows
-    * they touch reach their component's fold task through the broadcast
-    * txn → root map — no label frame is joined or materialized.
+    * without labeling anything (round 16: distributed labeling of the 20M
+    * adversarial batch cost 280–554 s of metadata rounds). Under the gate
+    * the edge list fits the driver, and [[Dedup.unionFind]] gives every
+    * edge-induced txn its component root (the min txnId); a keyed txn on
+    * no edge is a component of one and labels itself. The census
+    * (component count and largest component) is read off that map, and
+    * txns and the state rows they touch reach their component's fold task
+    * through the broadcast txn → root map — no label frame is joined or
+    * materialized.
+    *
+    * A batch that fails either gate splits at lo + (hi − lo) / 2 of its
+    * txnId bounds: the lower range applies through this method, then the
+    * upper range from the state it produced, and the results union. While
+    * lo < hi both ranges are non-empty, and a batch of one txnId has no
+    * edge and only components of one, so for any cap ≥ 1 the recursion
+    * ends in ranges that fold.
     */
   private[graft] def applyMultiKeyCapped(initialState: DataFrame,
       txns: Dataset[Txn], cap: Long): (DataFrame, DataFrame, MkStats) = {
+    require(cap >= 1, s"fold cap must be at least 1, got $cap")
     import txns.sparkSession.implicits._
-    val tds = timedStage("txn-ck")(txns.localCheckpoint(true))
+    val tds = txns.localCheckpoint(true)
     val flat = tds.toDF()
     val txnKeys = txnKeysOf(flat)
-    val edgesCk = timedStage("edges")(txnKeys
+    val edgesCk = txnKeys
       .withColumn("src", min(col("txn_id"))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("key"))))
       .filter(col("src") =!= col("txn_id"))
       .select(col("src").as("a_id"), col("txn_id").as("b_id"))
       .distinct()
-      .materialize)
+      .materialize
     // conflict edges and keyed txns (the census must count components of
     // one, which sit on no edge), both in ONE job: an RDD fold, where a
     // global agg() would pay a second job for its exchange
@@ -414,21 +241,40 @@ object TxnEngine {
       .as[(Long, Long)].rdd
       .fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
     if (edgeCount > math.min(cap, Dedup.LocalComponentsMaxEdges))
-      return applyGenerations(initialState, tds)
-    val root = timedStage("components")(Dedup.unionFind(edgesCk))
+      return applySplit(initialState, tds, cap)
+    val root = Dedup.unionFind(edgesCk)
     val sizes = scala.collection.mutable.LongMap.empty[Long]
     root.foreachValue(r => sizes(r) = sizes.getOrElse(r, 0L) + 1L)
     val isolated = keyedTxns - root.size
     val maxComp = math.max(sizes.valuesIterator.maxOption.getOrElse(0L),
       math.min(isolated, 1L))
-    if (maxComp > cap) return applyGenerations(initialState, tds)
+    if (maxComp > cap) return applySplit(initialState, tds, cap)
     val (state, results) = foldComponents(initialState, tds, txnKeys, root)
-    (state, results, MkStats(1, 0, sizes.size + isolated, maxComp))
+    (state, results, MkStats(1, sizes.size + isolated, maxComp))
   }
 
-  /** Fast path: fold every conflict component's txns sequentially (txnId
-    * order) against that component's slice of the state, one cogroup —
-    * all components in parallel, no cross-component coordination. `root`
+  /** An over-cap batch as two consecutive txnId ranges, each through
+    * [[applyMultiKeyCapped]], the upper one from the lower one's state.
+    */
+  private def applySplit(initialState: DataFrame, tds: Dataset[Txn],
+      cap: Long): (DataFrame, DataFrame, MkStats) = {
+    val bounds = tds.agg(min(col("txnId")), max(col("txnId"))).head()
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val mid = lo + ((hi - lo) >>> 1) // unsigned: hi − lo may overflow a Long
+    val (loState, loResults, loStats) =
+      applyMultiKeyCapped(initialState, tds.filter(col("txnId") <= mid), cap)
+    val (state, hiResults, hiStats) =
+      applyMultiKeyCapped(loState, tds.filter(col("txnId") > mid), cap)
+    (state, loResults.union(hiResults),
+      MkStats(loStats.applyPhases + hiStats.applyPhases,
+        loStats.foldedComponents + hiStats.foldedComponents,
+        math.max(loStats.maxComponentTxns, hiStats.maxComponentTxns)))
+  }
+
+  /** The one apply algorithm: fold every conflict component's txns
+    * sequentially (txnId order) against that component's slice of the
+    * state, one cogroup — all components in parallel, no
+    * cross-component coordination. `root`
     * maps each edge-induced txn to its component; any other txn is its
     * own component. Keyless txns stay out of the cogroup: they touch no
     * state and succeed vacuously.
@@ -489,178 +335,23 @@ object TxnEngine {
     (state, results)
   }
 
-  /** Fallback for batches with an over-cap conflict component: schedule
-    * into conflict-free generations and apply one barrier per conflict
-    * level with bounded per-task memory.
-    *
-    * Hot-key posture (the reference's per-key lock-waiter queues,
-    * StreamyDb.scala:66-129, let a hot key's chain drain without blocking
-    * other keys): single-key-only txns never occupy scheduler rounds.
-    * Scheduling runs ONCE up front ([[generations]] over the multi-key
-    * txns' metadata, plus one window assigning every single-key txn to
-    * the phase right after the last multi-key txn preceding it on its
-    * key). Each apply phase then (a) FOLDS that phase's single-key runs
-    * — one distributed `cogroup` over (state, txns) per key, applying a
-    * whole consecutive run in txnId order in one pass — and (b) applies
-    * the conflict-free multi-key generation via join-gate-merge against
-    * the post-fold state. Per-phase work is at most TWO materializations (the fold and
-    * the state merge); per-txn results stay lazy against checkpointed
-    * inputs and union in batches. Phases count the multi-key conflict
-    * depth only: a 1,000-txn single-hot-key log folds in ONE phase.
-    */
-  private def applyGenerations(initialState: DataFrame, tds: Dataset[Txn])
-      : (DataFrame, DataFrame, MkStats) = {
-    val spark = tds.sparkSession
-    import spark.implicits._
-    val flat = tds.toDF()
-    val txnKeys = txnKeysOf(flat)
-    val arity = txnKeys.groupBy(col("txn_id"))
-      .agg(count(lit(1)).as("nk"))
-    val keyed = timedStage("keyed")(txnKeys
-      .join(arity, "txn_id")
-      .select(col("txn_id"), col("key"), (col("nk") > 1).as("is_multi"))
-      .materialize)
-    val asserts = timedStage("asserts")(flat
-      .select(col("txnId").as("txn_id"), explode(col("asserts")).as("a"))
-      .select(col("txn_id"), col("a.key").as("key"),
-        col("a.valueOption").as("expected"))
-      .materialize)
-    // last update wins within a txn (reference applies updates in order)
-    val updates = timedStage("updates")(flat
-      .select(col("txnId").as("txn_id"), posexplode(col("updates")).as(Seq("pos", "u")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("txn_id"), col("u.key")).orderBy(col("pos").desc)))
-      .filter(col("rn") === 1)
-      .select(col("txn_id"), col("u.key").as("key"),
-        col("u.valueOption").as("u_value"))
-      .materialize)
-
-    // ---- scheduling: metadata-only passes ----
-    val (mGens, schedPasses) = timedStage("scheduling")(
-      generations(keyed.filter(col("is_multi")).select(col("txn_id"), col("key"))))
-    val gens = timedStage("gens-ck")(mGens.materialize)
-    // a single-key txn folds in the phase after the last multi-key txn
-    // preceding it on its key (phase 0 if none); each phase's fold applies
-    // the whole single-key run between two multis in one cogroup pass.
-    // An all-multi batch (a8's adversarial shape) skips the whole
-    // corpus-sized window: the phase assignment only exists for singles,
-    // so it is built on first use, which only a batch with singles makes.
-    val anySingles = timedStage("singles-exist")(
-      !keyed.filter(!col("is_multi")).isEmpty)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("txn_id"))
-    lazy val singlesPhase = timedStage("singles-phase")(keyed
-      .join(gens, Seq("txn_id"), "left_outer")
-      .withColumn("ph",
-        coalesce(last(when(col("is_multi"), col("gen")), ignoreNulls = true)
-          .over(w) + 1, lit(0)))
-      .filter(!col("is_multi"))
-      .select(col("txn_id"), col("key"), col("ph"))
-      .materialize)
-    // driver-bounded scheduling scalars: the phase count and which phases
-    // fold singles — O(#phases), never the txn set
-    val maxMultiGen = timedStage("sched-scalars") {
-      val r = gens.agg(max(col("gen"))).head()
-      if (r.isNullAt(0)) -1 else r.getInt(0)
-    }
-    val singlePhases =
-      if (!anySingles) Set.empty[Int]
-      else singlesPhase.select(col("ph")).distinct().as[Int].collect().toSet
-    val numPhases = math.max(maxMultiGen + 1,
-      if (singlePhases.isEmpty) 0 else singlePhases.max + 1)
-
-    var state = initialState
-    // keyless txns never enter the scheduler: vacuously successful
-    val resultParts = scala.collection.mutable.ArrayBuffer[DataFrame](
-      flat.filter(isKeyless)
-        .select(col("txnId").as("txn_id"), lit(true).as("succeeded")))
-    var phase = 0
-    while (phase < numPhases) {
-      // (a) fold this phase's single-key runs — one cogroup, one job
-      if (singlePhases(phase)) {
-        val readyS = singlesPhase.filter(col("ph") === phase)
-        val sk = tds.join(readyS, tds("txnId") === readyS("txn_id"),
-          "left_semi").as[Txn]
-        val byKey = sk.groupByKey(t => (t.asserts ++ t.updates).head.key)
-        val touched = readyS.select(col("key")).distinct()
-        val stTouched = state.join(touched, Seq("key"), "left_semi")
-          .as[(Key, Value)]
-        val folded = stTouched.groupByKey(_._1).cogroup(byKey) {
-          (k, stIt, txIt) =>
-            var value: Option[Value] = stIt.buffered.headOption.map(_._2)
-            val out = List.newBuilder[FoldEmit]
-            txIt.toSeq.sortBy(_.txnId).foreach { t =>
-              val ok = t.asserts.forall(_.valueOption == value)
-              if (ok) t.updates.foreach(u => value = u.valueOption)
-              out += FoldEmit(1, t.txnId, k, null, ok)
-            }
-            value.foreach(v => out += FoldEmit(0, -1L, k, v, false))
-            out.result().iterator
-        }.toDF().materialize
-        resultParts += folded.filter(col("kind") === 1)
-          .select(col("txnId").as("txn_id"), col("succeeded"))
-        state = state.join(touched, Seq("key"), "left_anti")
-          .union(folded.filter(col("kind") === 0)
-            .select(col("key"), col("value")))
-      }
-      // (b) the conflict-free multi-key generation, against post-fold state
-      if (phase <= maxMultiGen) {
-        val ready = gens.filter(col("gen") === phase).select(col("txn_id"))
-        val failed = asserts.join(ready, "txn_id")
-          .join(state, Seq("key"), "left_outer")
-          .filter(!(col("expected") <=> col("value")))
-          .select(col("txn_id")).distinct()
-        resultParts += ready
-          .join(failed.withColumn("f", lit(1)), Seq("txn_id"), "left_outer")
-          .select(col("txn_id"), col("f").isNull.as("succeeded"))
-        // generations are conflict-free, so ok-updates touch distinct keys
-        val up = updates.join(ready, "txn_id")
-          .join(failed, Seq("txn_id"), "left_anti")
-          .select(col("key").as("u_key"), col("u_value"))
-        state = state.join(up, col("key") === col("u_key"), "full_outer")
-          .select(coalesce(col("key"), col("u_key")).as("key"),
-            when(col("u_key").isNotNull, col("u_value"))
-              .otherwise(col("value")).as("value"))
-          .filter(col("value").isNotNull)
-      }
-      // the phase's one global materialization (results stay lazy — their
-      // lineage is shallow joins over this checkpoint and the fold's)
-      val tCk = System.nanoTime()
-      state = state.materialize
-      phase += 1
-      var mergeMs = 0.0
-      if (resultParts.length >= 32) { // keep the deferred union tree shallow
-        val t0 = System.nanoTime()
-        val merged = resultParts.reduce(_ union _).materialize
-        mergeMs = (System.nanoTime() - t0) / 1e6
-        resultParts.clear()
-        resultParts += merged
-      }
-      if (Debug) {
-        val bits = state.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
-        System.err.println(
-          f"[mk] phase=$phase%4d state_bits=$bits%9d ck_ms=${(System.nanoTime() - tCk) / 1e6}%8.1f merge_ms=$mergeMs%8.1f")
-      }
-    }
-    val results = resultParts.reduce(_ union _)
-    (state, results.select(col("txn_id").as("txnId"), col("succeeded")),
-      MkStats(phase, schedPasses))
-  }
-
   /** Streaming multi-key Calvin: the Structured-Streaming analog of the
     * reference's Kafka feedback loop (StreamyDb.scala:177-242 — results
     * re-entering as per-key apply/release messages). There the loop runs
     * between operators of one dataflow; here it runs between micro-batches:
-    * each batch of txns goes through the fused scheduler/apply rounds
+    * each batch of txns goes through the component fold
     * ([[applyMultiKey]]) against the distributed state carried from
     * all previous batches. Feeding batches in txnId order reproduces the
     * deterministic sequential semantics (proved by the spec oracle).
     *
     * Use as the `foreachBatch` sink of a `Dataset[Txn]` stream; the state
     * and accumulated per-txn results stay DataFrames throughout, each
-    * re-rooted on one checkpoint per batch, so a batch's plan and job
-    * count do not grow with the number of batches before it.
+    * re-rooted on one checkpoint per batch, so a batch's plan (one node)
+    * and job count do not grow with the number of batches before it. Its
+    * partition and task counts still do: the untouched-state leg keeps
+    * every partition of the previous state, so the state gains one
+    * partition per batch, and each batch's results checkpoint re-copies
+    * every earlier batch's segment.
     *
     * @param checkpointDir when set, every committed batch persists the KV
     *   state and that batch's results as parquet plus a commit marker —

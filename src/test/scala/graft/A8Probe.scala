@@ -1,7 +1,7 @@
 package graft
 
-/** Scratch probe (dev tool): run a8 end-to-end at the given SF dir with
-  * SPARK_GRAFT_MK_DEBUG=1 to watch per-phase cost.
+/** Scratch probe (dev tool): run a8 end-to-end at the given SF dir and
+  * print its wall time.
   */
 object A8Probe {
   def main(args: Array[String]): Unit = {

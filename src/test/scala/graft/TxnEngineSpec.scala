@@ -36,19 +36,18 @@ class TxnEngineSpec extends AnyFunSuite {
     (state, results.as[MkResult].collect().toSeq)
   }
 
-  /** Txns grouped by [[TxnEngine.generations]], in generation order. */
-  private def generationsOf(txns: Seq[Txn]): Seq[Seq[Txn]] = {
-    import s.implicits._
-    val keys = txns.flatMap(t =>
-      (t.asserts ++ t.updates).map(kv => (t.txnId, kv.key))).distinct
-    val byGen = TxnEngine.generations(keys.toDF("txn_id", "key"))._1
-      .as[(Long, Int)].collect().groupBy(_._2)
-    val byId = txns.map(t => t.txnId -> t).toMap
-    (0 until byGen.size).map(g => byGen(g).map(r => byId(r._1)).toSeq.sortBy(_.txnId))
-  }
-
-  private def gensMap(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
-    df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+  /** A txn per id over its (txn_id, key) rows, in id order: each writes
+    * its own value to all its keys, and odd ids also assert their first
+    * key holds the value the id before wrote, so asserts both hit and miss.
+    */
+  private def txnsOn(rows: Seq[(Long, String)]): Seq[Txn] =
+    rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (id, ks) =>
+      val keys = ks.map(_._2).distinct
+      Txn(id,
+        if (id % 2 == 0) Seq.empty
+        else Seq(KeyValueOption(keys.head, Some(s"v${id - 1}"))),
+        keys.map(KeyValueOption(_, Some(s"v$id"))))
+    }
 
   test("multi-key generation scheduler matches the sequential oracle") {
     for (seed <- Seq(1L, 7L, 42L)) {
@@ -59,23 +58,6 @@ class TxnEngineSpec extends AnyFunSuite {
         s"results diverge for seed=$seed")
       val got = stateDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(got == oracleState, s"state diverges for seed=$seed")
-    }
-  }
-
-  test("generations never reuse a key within a round and respect txn order") {
-    val txns = randomTxns(3L, 40, 5)
-    val gens = generationsOf(txns)
-    gens.foreach { g =>
-      val ks = g.flatMap(t => (t.asserts ++ t.updates).map(_.key).distinct)
-      assert(ks.distinct.size == ks.size, "key conflict within a generation")
-    }
-    // a txn's keys must not appear in any earlier txn of a later generation
-    val genOf = gens.zipWithIndex.flatMap { case (g, i) => g.map(_.txnId -> i) }.toMap
-    txns.foreach { t =>
-      val ks = (t.asserts ++ t.updates).map(_.key).toSet
-      txns.filter(u => u.txnId < t.txnId &&
-        (u.asserts ++ u.updates).exists(kv => ks(kv.key)))
-        .foreach(u => assert(genOf(u.txnId) < genOf(t.txnId)))
     }
   }
 
@@ -150,12 +132,13 @@ class TxnEngineSpec extends AnyFunSuite {
     info(s"applyPhases=${stats.applyPhases} components=${stats.foldedComponents}")
   }
 
-  test("generational fallback: 100-deep chain in depth barriers, one scheduling scan") {
+  test("split path: a 100-deep chain over cap 10 folds in 16 txnId ranges") {
     import s.implicits._
-    // same chain, forced down the generational path by a zero fold cap:
-    // application is semantically sequential (100 apply phases), but its
-    // 200 incidence rows SCHEDULE in one sorted scan, not 100 ready-set
-    // rounds — and results must match the sequential oracle.
+    // same chain at fold cap 10. A range of n consecutive chain txns is
+    // one component on n - 1 edges, so it splits iff n > 10, at
+    // lo + (hi - lo) / 2: 100 -> 50 + 50 -> 25 each -> 13 + 12 each ->
+    // 7 + 6 and 6 + 6 each. 16 ranges fold, one component each, the
+    // largest 7 txns — and results must match the sequential oracle.
     val txns = (0 until 100).map { i =>
       Txn(i.toLong,
         asserts = if (i == 0) Seq.empty
@@ -164,25 +147,23 @@ class TxnEngineSpec extends AnyFunSuite {
           KeyValueOption(s"c${i + 1}", Some(s"v$i"))))
     }
     val (stateDf, resultsDf, stats) =
-      TxnEngine.applyMultiKeyCapped(emptyState, txns.toDS(), 0L)
+      TxnEngine.applyMultiKeyCapped(emptyState, txns.toDS(), 10L)
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
     assert(resultsDf.as[MkResult].collect().toSeq.sortBy(_.txnId)
       == oracleResults.sortBy(_.txnId))
     assert(stateDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
       == oracleState)
-    assert(stats.applyPhases == 100,
-      s"expected 100 sequential apply phases, got ${stats.applyPhases}")
-    assert(stats.schedulerPasses == 1,
-      s"scheduling took ${stats.schedulerPasses} passes for a 100-deep chain")
-    info(s"applyPhases=${stats.applyPhases} schedulerPasses=${stats.schedulerPasses}")
+    assert(oracleResults.forall(_.succeeded), "chain asserts must all pass")
+    assert(stats == MkStats(16, 16L, 7L), s"expected 16 ranges of <= 7, got $stats")
   }
 
-  test("fold and generational paths agree on a mixed random workload") {
+  test("fold and split paths agree on a mixed random workload") {
     import s.implicits._
     // deterministic pseudo-random mix: hot-key singles, multi-key txns
     // over a small keyspace (deep conflict components), deletes,
     // assert-absent, keyless txns — both engines must equal the
-    // sequential oracle and each other.
+    // sequential oracle and each other. At fold cap 64 the split path
+    // applies the batch's one big component in txnId ranges.
     val txns = (0 until 400).map { i =>
       val r = ((i * 2654435761L) >>> 7) // deterministic hash ordering
       val k1 = s"k${r % 13}"
@@ -199,107 +180,45 @@ class TxnEngineSpec extends AnyFunSuite {
       Txn(i.toLong, if (updates.isEmpty) Seq.empty else asserts, updates)
     }
     val (stF, resF, statsF) = TxnEngine.applyMultiKey(emptyState, txns.toDS())
-    val (stG, resG, _) = TxnEngine.applyMultiKeyCapped(emptyState, txns.toDS(), 0L)
+    val (stS, resS, statsS) =
+      TxnEngine.applyMultiKeyCapped(emptyState, txns.toDS(), 64L)
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
     assert(statsF.applyPhases == 1, "mixed workload must take the fold path")
+    assert(statsS.applyPhases > 1, s"cap 64 did not split: $statsS")
     val rF = resF.as[MkResult].collect().toSeq.sortBy(_.txnId)
-    val rG = resG.as[MkResult].collect().toSeq.sortBy(_.txnId)
+    val rS = resS.as[MkResult].collect().toSeq.sortBy(_.txnId)
     assert(rF == oracleResults.sortBy(_.txnId))
-    assert(rG == rF, "generational and fold results diverge")
-    val sF = stF.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val sG = stG.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(sF == oracleState)
-    assert(sG == sF, "generational and fold state diverge")
+    assert(rS == rF, "split and fold results diverge")
+    assert(stateMap(stF) == oracleState)
+    assert(stateMap(stS) == stateMap(stF), "split and fold state diverge")
   }
 
-  test("scheduler bails from path doubling to label relaxation past the pair cap") {
+  test("split path equals the oracle on ladder, hot-run and bridged shapes") {
     import s.implicits._
-    // Path doubling and its closure-pair cap are gone: past the row/key
-    // gates the scheduler goes straight to label relaxation, so zero gates
-    // stand in for the old tiny pair cap. The c_i/c_{i+1} ladder at depth
-    // 40 is chain relaxation's WORST case — every edge switches key, so it
-    // degrades to one level per pass (+ 1 convergence check). Under the
-    // default gates the sequential scan takes the same batch in one pass;
-    // the generations must be identical either way.
-    val ladder = (0 until 40).flatMap(i =>
-      Seq((i.toLong, s"c$i"), (i.toLong, s"c${i + 1}")))
-      .toDF("txn_id", "key")
-    val (gensScan, passesScan) = TxnEngine.generations(ladder)
-    val (gensRelaxed, passesRelaxed) = TxnEngine.generationsGated(ladder, 0L, 0L)
-    val expected = (0 until 40).map(i => i.toLong -> i).toMap
-    assert(gensMap(gensScan) == expected)
-    assert(gensMap(gensRelaxed) == expected)
-    assert(passesScan == 1, s"sequential scan took $passesScan passes")
-    assert(passesRelaxed >= 40 && passesRelaxed <= 45,
-      s"relaxation took $passesRelaxed passes for a 40-deep chain")
-    info(s"scan=$passesScan relaxed=$passesRelaxed")
-  }
-
-  test("chain relaxation resolves long per-key runs in one pass, not one per level") {
-    import s.implicits._
-    // zero gates force the distributed scheduler on these tiny batches
-    def relaxed(df: org.apache.spark.sql.DataFrame) =
-      TxnEngine.generationsGated(df, 0L, 0L)
-    // (a) one 50-txn chain on a single hot key: depth 49, but the whole
-    // chain is ONE window prefix-max — the fallback must converge in
-    // ~2 passes, not ~50 (passes track key switches, not depth)
-    val hot = (0 until 50).map(i => (i.toLong, "hot")).toDF("txn_id", "key")
-    val (gensHot, passesHot) = relaxed(hot)
-    assert(gensMap(gensHot) == (0 until 50).map(i => i.toLong -> i).toMap)
-    assert(passesHot <= 4,
-      s"single-chain fallback took $passesHot passes (depth-bounded again?)")
-    // (b) two 15-txn runs bridged by one shared txn: depth 29 with ONE
-    // key switch on the critical path — a few passes, not ~30
-    val twoRuns = ((0 to 14).map(i => (i.toLong, "a")) ++
-      (14 to 29).map(i => (i.toLong, "b"))).toDF("txn_id", "key")
-    val (gensTwo, passesTwo) = relaxed(twoRuns)
-    val m = gensMap(gensTwo)
-    assert(m(14) == 14 && m(29) == 29, s"wrong depths: ${m(14)}, ${m(29)}")
-    assert(passesTwo <= 5,
-      s"two-segment fallback took $passesTwo passes")
-    info(s"hot=$passesHot twoRuns=$passesTwo")
-  }
-
-  test("generations gate dispatches on distinct keys, not rows alone") {
-    import s.implicits._
-    // 100 unique-key txns plus a 10-txn run on one hot key: rows pass the
-    // row cap but the key-map bound must push the batch to the
-    // distributed path (the hot run resolves in one relaxation pass, a
-    // second confirms it: 2 passes); with both caps open the sequential
-    // scan takes it (1 pass). Same generations either way.
-    val df = ((0 until 100).map(i => (i.toLong, s"u$i")) ++
-      (100 until 110).map(i => (i.toLong, "hot"))).toDF("txn_id", "key")
-    val (seqGens, seqPasses) = TxnEngine.generationsGated(df, 1000L, 1000L)
-    val (distGens, distPasses) = TxnEngine.generationsGated(df, 1000L, 10L)
-    assert(seqPasses == 1 && distPasses == 2,
-      s"gate did not dispatch: seq=$seqPasses dist=$distPasses")
-    val expected = (0 until 100).map(i => i.toLong -> 0).toMap ++
-      (100 until 110).map(i => i.toLong -> (i - 100)).toMap
-    assert(gensMap(seqGens) == expected && gensMap(distGens) == expected)
-  }
-
-  test("sequential generations match the distributed scheduler exactly") {
-    import s.implicits._
-    // the three pinned shapes (ladder / hot chain / bridged runs) plus a
-    // random multi-key batch, each checked against chain relaxation
+    // conflict shapes that each make one component over fold cap 8, so
+    // each applies in ranges: a ladder whose every edge switches key, one
+    // hot-key run, two runs bridged by one txn, unique keys then a hot
+    // run, and a random batch over 5 keys
     val ladder = (0 until 40).flatMap(i =>
       Seq((i.toLong, s"c$i"), (i.toLong, s"c${i + 1}")))
     val hot = (0 until 50).map(i => (i.toLong, "hot"))
-    val rnd = new scala.util.Random(7)
-    val random = (0 until 400).flatMap(i =>
-      Seq((i.toLong, s"k${rnd.nextInt(60)}"), (i.toLong, s"k${rnd.nextInt(60)}")))
-    for ((name, rows) <- Seq(("ladder", ladder), ("hot", hot),
-        ("random", random))) {
-      val df = rows.toDF("txn_id", "key")
-      val seq = gensMap(TxnEngine.sequentialGenerations(df))
-      val relaxed = gensMap(TxnEngine.generationsGated(df, 0L, 0L)._1)
-      assert(seq == relaxed, s"$name: seq != relaxed")
+    val bridged = (0 to 14).map(i => (i.toLong, "a")) ++
+      (14 to 29).map(i => (i.toLong, "b"))
+    val uniqueThenHot = (0 until 100).map(i => (i.toLong, s"u$i")) ++
+      (100 until 110).map(i => (i.toLong, "hot"))
+    for ((name, txns) <- Seq("ladder" -> txnsOn(ladder), "hot" -> txnsOn(hot),
+        "bridged" -> txnsOn(bridged), "unique+hot" -> txnsOn(uniqueThenHot),
+        "random" -> randomTxns(3L, 40, 5))) {
+      val (stateDf, resultsDf, stats) =
+        TxnEngine.applyMultiKeyCapped(emptyState, txns.toDS(), 8L)
+      val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
+      assert(stats.applyPhases > 1 && stats.maxComponentTxns <= 8L,
+        s"$name: $stats")
+      assert(resultsDf.as[MkResult].collect().toSeq.sortBy(_.txnId) ==
+        oracleResults, s"$name: results diverge")
+      assert(stateMap(stateDf) == oracleState, s"$name: state diverges")
+      info(s"$name: $stats")
     }
-    // duplicate incidence rows must not inflate generations
-    val dup = Seq((0L, "a"), (0L, "a"), (1L, "a"), (1L, "a"))
-      .toDF("txn_id", "key")
-    assert(gensMap(TxnEngine.sequentialGenerations(dup)) ==
-      Map(0L -> 0, 1L -> 1))
   }
 
   test("multi-key stream recovers from its checkpoint after a kill/restart") {
@@ -388,7 +307,7 @@ class TxnEngineSpec extends AnyFunSuite {
     val (stateDf, resultsDf, stats) =
       TxnEngine.applyMultiKey(initial, batch.toDS())
     val (oracleState, oracleResults) = TxnEngine.sequentialOracle(seed ++ batch)
-    assert(stats == MkStats(1, 0, 6L, 5L), s"census: $stats")
+    assert(stats == MkStats(1, 6L, 5L), s"census: $stats")
     assert(stateMap(stateDf) == oracleState)
     assert(resultsDf.as[MkResult].collect().toSeq.sortBy(_.txnId) ==
       oracleResults.filter(_.txnId >= 10L))
@@ -396,22 +315,22 @@ class TxnEngineSpec extends AnyFunSuite {
 
     val (_, noRes, noStats) =
       TxnEngine.applyMultiKey(initial, Seq.empty[Txn].toDS())
-    assert(noStats == MkStats(1, 0, 0L, 0L) && noRes.isEmpty)
+    assert(noStats == MkStats(1, 0L, 0L) && noRes.isEmpty)
     val keyless = Seq(Txn(1L, Seq.empty, Seq.empty), Txn(2L, Seq.empty, Seq.empty))
     val (klState, klRes, klStats) =
       TxnEngine.applyMultiKey(emptyState, keyless.toDS())
-    assert(klStats == MkStats(1, 0, 0L, 0L), s"all-keyless census: $klStats")
+    assert(klStats == MkStats(1, 0L, 0L), s"all-keyless census: $klStats")
     assert(klState.isEmpty)
     assert(klRes.as[MkResult].collect().toSeq.sortBy(_.txnId) ==
       Seq(MkResult(1L, true), MkResult(2L, true)))
   }
 
-  test("fold cap boundary: cap txns fold, cap + 1 go generational") {
+  test("fold cap boundary: cap txns fold, cap + 1 split by txnId range") {
     import s.implicits._
     // an n-txn c_i/c_{i+1} chain is one component of n txns on n-1 edges;
     // n = cap + 1 passes the edge gate, so the union-find census is what
-    // sends it generational, and n = cap + 2 is refused by the edge gate
-    val cap = 6L
+    // splits it, and n = cap + 2 is split by the edge gate. Both split at
+    // id 3 (0 + 6 / 2 and 0 + 7 / 2) into chains of 4 and 3, or 4 and 4
     def chain(n: Int) = (0 until n).map { i =>
       Txn(i.toLong,
         asserts = if (i == 0) Seq.empty
@@ -419,18 +338,22 @@ class TxnEngineSpec extends AnyFunSuite {
         updates = Seq(KeyValueOption(s"c$i", Some(s"v$i")),
           KeyValueOption(s"c${i + 1}", Some(s"v$i"))))
     }
-    for (n <- Seq(cap.toInt, cap.toInt + 1, cap.toInt + 2)) {
+    // at cap 1 any two chained txns are over the cap: every txn its own range
+    for ((n, cap, expected) <- Seq((6, 6L, MkStats(1, 1L, 6L)),
+        (7, 6L, MkStats(2, 2L, 4L)), (8, 6L, MkStats(2, 2L, 4L)),
+        (6, 1L, MkStats(6, 6L, 1L)))) {
       val txns = chain(n)
       val (stateDf, resultsDf, stats) =
         TxnEngine.applyMultiKeyCapped(emptyState, txns.toDS(), cap)
-      val expected =
-        if (n <= cap) MkStats(1, 0, 1L, n.toLong)
-        else MkStats(n, stats.schedulerPasses)
-      assert(stats == expected, s"n=$n took $stats")
+      assert(stats == expected, s"n=$n cap=$cap took $stats")
       val (oracleState, oracleResults) = TxnEngine.sequentialOracle(txns)
-      assert(stateMap(stateDf) == oracleState, s"state diverges at n=$n")
+      assert(stateMap(stateDf) == oracleState, s"state diverges at n=$n cap=$cap")
       assert(resultsDf.as[MkResult].collect().toSeq.sortBy(_.txnId) ==
-        oracleResults, s"results diverge at n=$n")
+        oracleResults, s"results diverge at n=$n cap=$cap")
+    }
+    // cap 0 would split a batch of one keyed txn forever
+    intercept[IllegalArgumentException] {
+      TxnEngine.applyMultiKeyCapped(emptyState, chain(1).toDS(), 0L)
     }
   }
 
