@@ -123,7 +123,8 @@ gen("embeddings", lambda i: f"""
 # ALWAYS rewrite with bounded row groups: DuckDB's COPY emits ~123k-row
 # groups, which left sf10 documents with FIVE row groups — Spark cannot
 # split inside a row group, so every scan of the table was capped at
-# 5-way parallelism on a 32-core box (round 12, PartProbe: one partition
+# 5-way parallelism on a 32-core box (the round-12 PartProbe, since
+# removed; SURVEY.md's round-12 status records it: one partition
 # held 25% of the corpus). Real lake tables at 100 TB have thousands of
 # files x row groups; ~64 groups per table keeps the dev fixture's scan
 # parallelism representative of that, not of a single fat COPY.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries (SURVEY §6) against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is forced
   * end-to-end with a noop-format write (`.count()` alone lets Spark
@@ -29,19 +27,8 @@ object Bench {
       .getOrElse(0L)
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
       math.min(cpus.toLong, math.max(8L, inputBytes / (32L << 20))).toString)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .withExtensions(new functions.GraftExtensions)
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("SPARK_GRAFT_WSCG", "true"))
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.stateStoreProvider
-        .map(("spark.sql.streaming.stateStore.providerClass", _)).toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -323,8 +310,7 @@ object Bench {
     // (5.1k docs / 50.5k vectors — the ScaleProbeSpec corpora). Signature
     // and bucket stages are materialized first so the timed section is
     // the candidate join itself.
-    val probes = if (sections("probes") &&
-        sys.env.getOrElse("SPARK_GRAFT_PROBES", "true") == "true") {
+    val probes = if (sections("probes")) {
       def timed(body: => Long): (Long, Double) = {
         val t0 = System.nanoTime()
         val r = body

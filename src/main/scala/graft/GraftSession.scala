@@ -19,7 +19,7 @@ object GraftSession {
     * same DuckDB oracles (round 13; docs/ROCKSDB_r13.md records the
     * throughput/state-size comparison on the 1M-event g8 feed).
     */
-  private[graft] val stateStoreProvider: Option[String] =
+  private val stateStoreProvider: Option[String] =
     sys.env.get("SPARK_GRAFT_STATE_STORE") match {
       case Some("rocksdb") => Some("org.apache.spark.sql.execution." +
         "streaming.state.RocksDBStateStoreProvider")

@@ -464,10 +464,7 @@ object Dedup {
 
   /** d6: dedup groups — connected components over the LSH near-dup pairs
     * (every doc labeled with the smallest doc_id reachable through
-    * near-dup edges; singletons label themselves). Min-label propagation
-    * with a pointer-doubling shortcut each round (`group_id :=
-    * label(group_id)`), so convergence is O(log diameter) rounds; a
-    * non-converged exit throws rather than returning wrong labels.
+    * near-dup edges; singletons label themselves), via [[componentsOf]].
     */
   def d6(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -483,182 +480,72 @@ object Dedup {
       .select($"doc_id", coalesce($"g", $"doc_id").as("group_id"))
   }
 
-  /** Edge-count ceiling for the driver union-find fast path: 4M pairs =
-    * 64 MB of longs — comfortably under broadcast-table size and a
-    * fraction of any driver heap, while LSH-candidate graphs at gate SFs
-    * are orders of magnitude smaller. (Raised from 200k in round 10: the
-    * sf10 a8 conflict graph is ~1M edges, and the distributed doubling
-    * loop paid 8 s of per-round job overhead for a graph the driver
-    * unions in well under a second.) Past it the distributed loop runs —
-    * the only shape that holds when the dup graph itself is
+  /** Edge-count ceiling for the driver union-find path of [[componentsOf]]:
+    * 4M pairs = 64 MB of longs, under broadcast-table size and a fraction
+    * of any driver heap. The LSH and cosine candidate graphs of d6/d11
+    * stay far under it at every gate SF, and TxnEngine's component fold
+    * gates its own [[unionFind]] by it. Past it the distributed loop
+    * runs: the shape that holds when the pair list itself is
     * cluster-sized.
     */
   val LocalComponentsMaxEdges = 4000000L
 
   /** Min-label connected components over an undirected pair list
     * (`a_id`, `b_id`): every vertex appearing in some pair is labeled
-    * with the smallest id reachable through the pairs — pointer-doubled
-    * propagation, O(log diameter) rounds, each shuffling O(edges).
-    * Returns `(doc_id, group_id)` for the edge-induced vertex set ONLY
-    * (callers left-join the corpus so untouched rows never enter the
-    * loop). Shared by [[d6]] (text near-dup groups) and [[d11]]
-    * (embedding-space components).
+    * with the smallest id reachable through the pairs. Returns
+    * `(doc_id, group_id)` for the edge-induced vertex set ONLY (callers
+    * left-join the corpus so untouched rows never enter it). Shared by
+    * [[d6]] (text near-dup groups) and [[d11]] (embedding-space
+    * components). Two paths, one result:
+    *  - at most `maxLocalEdges` pairs: the driver [[unionFind]], one
+    *    bounded collect;
+    *  - past it: distributed min-label propagation with a
+    *    pointer-doubling shortcut each round, O(log diameter) rounds each
+    *    shuffling O(edges), until no label moves; a loop that has not
+    *    converged after 25 rounds throws rather than return wrong labels.
     */
   def componentsOf(pairs: DataFrame,
       maxLocalEdges: Long = LocalComponentsMaxEdges): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val debug = sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1")
-    def timed[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (debug) System.err.println(
-        f"[cc] $what ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
+    import pairs.sparkSession.implicits._
     val p = pairs.localCheckpoint(true)
-    // runtime-adaptive, like AQE's broadcast conversion: near-dup graphs
-    // are usually a sliver of the corpus (the bench probes measure
-    // candidate fractions of 1e-3..1e-6), so when the EDGE LIST is
-    // driver-small a sequential union-find replaces an O(log d)-round
-    // distributed loop — same min-label result (hash-gated), none of the
-    // per-round job+shuffle overhead. The distributed path below remains
-    // the scale story for graphs that genuinely don't fit.
     if (p.count() <= maxLocalEdges) return componentsLocal(p)
     // the STATIC symmetric edge frame is hash-partitioned on src once —
     // checkpoints preserve outputPartitioning, so every round's
-    // edges⋈labels join plans with NO exchange of the (biggest) edge
-    // side; labels re-align to doc_id at the end of each round (20M-row
-    // repartition replacing a 40M-row edge shuffle per round on the a8
-    // 20M probe workload)
-    val edges = timed("edges-ck")(p
+    // edges⋈labels join plans with NO exchange of the (biggest) edge side
+    val edges = p
       .select($"a_id".as("src"), $"b_id".as("dst"))
       .union(p.select($"b_id".as("src"), $"a_id".as("dst")))
       .repartition($"src")
-      .localCheckpoint(true))
-    // iterate over the EDGE-INDUCED vertex set only: a doc with no
-    // near-dup edge keeps its own label, so the corpus never enters the
-    // propagation loop — each round shuffles O(edges), not O(corpus),
-    // and at 100 TB the loop runs on the (tiny) dup graph alone
-    var labels = timed("labels-init")(edges
+      .localCheckpoint(true)
+    var labels = edges
       .select($"src".as("doc_id")).distinct()
       .select($"doc_id", $"doc_id".as("group_id"))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     var converged = labels.isEmpty
     var rounds = 0
-    var nextAttemptLabels = Long.MaxValue // contraction retry gate (below)
     val maxRounds = 25 // log2(diameter) rounds suffice; 2^25 ≫ any corpus
-    // The late rounds of min-label propagation are intrinsically SKEWED:
-    // once a giant component's min label wins most vertices, the
-    // pointer-doubling self-join keys millions of rows on that ONE label
-    // (the r15 a8 probe measured the components stage superlinear, 95 →
-    // 280 s at 2×, A8ScaleProbe scaladoc). Two measured mitigations, both
-    // inside this loop:
-    //   1. AQE's skew splitter TUNED for narrow metadata rows — the
-    //      repo's own Skew.scala decision rule #1: the 256 MB default
-    //      threshold hides a multi-million-row straggler of 24-byte
-    //      rows, so the splitter never fires; 32 MB/16 MB makes it act.
-    //   2. LABEL-GRAPH CONTRACTION (below): as soon as the surviving
-    //      label set is small, the remaining work is a component search
-    //      over LABELS, not vertices — contract the edges to distinct
-    //      label pairs and finish with the same bounded driver
-    //      union-find the ≤4M-edge fast path uses. The giant-label
-    //      rounds (the skewed ones) never run at all, and min-of-labels
-    //      IS min-of-vertices (every label is a member vertex id), so
-    //      the result is bit-identical.
-    val skewConfs = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32m",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m")
-    val saved = skewConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    skewConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      while (!converged && rounds < maxRounds) {
-        val viaEdges = edges
-          .join(labels.withColumnRenamed("doc_id", "src"), "src")
-          .groupBy($"dst".as("doc_id"))
-          .agg(min($"group_id").as("n_group"))
-        // `old` rides along so convergence needs no extra join below
-        val prop = labels.join(viaEdges, Seq("doc_id"), "left_outer")
-          .select($"doc_id", $"group_id".as("old"),
-            least(coalesce($"n_group", $"group_id"), $"group_id")
-              .as("group_id"))
-        // pointer doubling: every label is itself a doc_id, so jump to
-        // the label's label (always <= the label) — halves remaining
-        // chain depth. ONE checkpoint per round: prop is recomputed once
-        // inside the self-join (a cheap edge-join) instead of paying a
-        // second eager-checkpoint barrier, and the census below runs on
-        // the already-materialized result
-        val next = timed(s"round-$rounds")(prop.join(
-            prop.select($"doc_id".as("group_id"), $"group_id".as("gg")),
-            Seq("group_id"), "left_outer")
-          .select($"doc_id", $"old",
-            coalesce($"gg", $"group_id").as("group_id"))
-          .materialize)
-        // one census pass serves two reads: convergence (no label moved)
-        // and the surviving-label count (the contraction trigger). The
-        // groupBy's partial aggregation absorbs the giant label
-        // map-side — the census itself never skews.
-        val census = timed(s"census-$rounds")(next
-          .groupBy($"group_id")
-          .agg(sum(when($"group_id" =!= $"old", 1L).otherwise(0L)).as("ch"))
-          .agg(coalesce(sum($"ch"), lit(0L)), count(lit(1))).head())
-        val (changed, nLabels) = (census.getLong(0), census.getLong(1))
-        if (debug) System.err.println(
-          s"[cc] round $rounds changed=$changed labels=$nLabels")
-        converged = changed == 0L
-        labels = next.select($"doc_id", $"group_id")
-        rounds += 1
-        if (!converged && nLabels <= math.max(maxLocalEdges, 1L) &&
-            nLabels < nextAttemptLabels) {
-          // contraction: relabel each edge's endpoints with the current
-          // labels and dedupe — map-side partial-dedup collapses the
-          // (by now highly repetitive) label pairs before the shuffle.
-          // If the label graph fits the driver cap, the bounded
-          // union-find finishes the search exactly. A failed attempt
-          // (label graph still too big) costs ~one round of joins
-          // (15-69 s each on the dense a8 adversarial graph, measured
-          // in A8ScaleProbe r16), so the retry gate below uses the
-          // failed attempt's OWN measured size — known for free at
-          // failure time — instead of the old blind labels-halving
-          // rule: label-pair count shrinks at most ~proportionally with
-          // surviving labels, so the next attempt can only fit once
-          // labels have dropped by the measured overshoot factor. Every
-          // failure tightens the gate multiplicatively, so total
-          // attempts stay O(log labels) as before.
-          val lbl = labels.localCheckpoint(true)
-          val contracted = timed(s"contract-$rounds")(edges
-            .join(lbl.withColumnRenamed("doc_id", "src")
-              .withColumnRenamed("group_id", "sl"), "src")
-            .join(lbl.withColumnRenamed("doc_id", "dst")
-              .withColumnRenamed("group_id", "dl"), "dst")
-            .filter($"sl" < $"dl") // undirected; self-pairs carry nothing
-            .select($"sl".as("a_id"), $"dl".as("b_id"))
-            .distinct()
-            .localCheckpoint(true))
-          val contractedCount = contracted.count()
-          if (contractedCount > maxLocalEdges) {
-            nextAttemptLabels = math.max(1L,
-              (nLabels.toDouble * maxLocalEdges / contractedCount).toLong)
-            if (debug) System.err.println(
-              s"[cc] contract-$rounds failed: $contractedCount pairs > " +
-                s"$maxLocalEdges cap; next attempt under $nextAttemptLabels labels")
-          } else {
-            val roots = timed(s"uf-$rounds")(
-              componentsLocal(contracted)
-                .select($"doc_id".as("group_id"), $"group_id".as("root")))
-            // compose: vertex → round-r label → union-find root. The
-            // broadcast join keys the (skewed) label column against a
-            // driver-small map — no shuffle, so the skew is free.
-            return timed(s"compose-$rounds")(lbl
-              .join(broadcast(roots), Seq("group_id"), "left_outer")
-              .select($"doc_id",
-                coalesce($"root", $"group_id").as("group_id")))
-          }
-        }
-      }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    while (!converged && rounds < maxRounds) {
+      val viaEdges = edges
+        .join(labels.withColumnRenamed("doc_id", "src"), "src")
+        .groupBy($"dst".as("doc_id"))
+        .agg(min($"group_id").as("n_group"))
+      // `old` rides along so convergence needs no extra join below
+      val prop = labels.join(viaEdges, Seq("doc_id"), "left_outer")
+        .select($"doc_id", $"group_id".as("old"),
+          least(coalesce($"n_group", $"group_id"), $"group_id")
+            .as("group_id"))
+      // pointer doubling: every label is itself a doc_id, so jump to the
+      // label's label (always <= the label) — halves remaining chain
+      // depth. ONE checkpoint per round: prop is recomputed once inside
+      // the self-join instead of paying a second checkpoint barrier
+      val next = prop.join(
+          prop.select($"doc_id".as("group_id"), $"group_id".as("gg")),
+          Seq("group_id"), "left_outer")
+        .select($"doc_id", $"old", coalesce($"gg", $"group_id").as("group_id"))
+        .materialize
+      converged = next.filter($"group_id" =!= $"old").isEmpty
+      labels = next.select($"doc_id", $"group_id")
+      rounds += 1
     }
     if (!converged) throw new IllegalStateException(
       s"label propagation did not converge within $maxRounds rounds; " +
@@ -675,9 +562,8 @@ object Dedup {
   /** Driver union-find over a small (`a_id`, `b_id`) edge list (callers
     * gate it by [[LocalComponentsMaxEdges]]): union-by-min keeps every
     * root the smallest id of its component, so the returned vertex →
-    * root map IS the min-label — exactly [[componentsOf]]'s distributed
-    * result over the edge-induced vertex set, at the cost of one bounded
-    * collect instead of log(diameter) shuffle rounds. Shared with
+    * root map IS the min-label over the edge-induced vertex set, for one
+    * bounded collect. The local path of [[componentsOf]]; also
     * TxnEngine's component fold, which reads its census off the map.
     */
   private[graft] def unionFind(pairs: DataFrame)
@@ -873,8 +759,9 @@ object Dedup {
       .select($"a_id", $"b_id").distinct().localCheckpoint(true)
     // shingle sets ONLY for docs that appear in a candidate pair: the
     // exact-jaccard verify needs |candidate-ids| shingle arrays, not a
-    // second full tokenize+shingle pass over the corpus (G10Anatomy at
-    // sf10: the full-batch shingle-set build cost 9.9 s against 23
+    // second full tokenize+shingle pass over the corpus (the round-11
+    // G10Anatomy probe, since removed; recorded in SURVEY.md's round-11
+    // status — at sf10 the full-batch shingle-set build cost 9.9 s against 23
     // actual candidates — the restricted build is the per-batch ~
     // |batch|-independent verify cost the scaladoc promises)
     val needed = cand.select($"a_id".as("doc_id"))

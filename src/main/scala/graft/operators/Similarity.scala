@@ -51,7 +51,8 @@ object Similarity {
     * scored by the summed |dot| margin of its flipped planes (the
     * cheapest perturbations first) and only the [[RankedProbeBudget]]
     * best-ranked masks per table are probed. Measured at sf10 (200k
-    * vectors, p = 16, S2TierProbe, ground truth s1): the round-10
+    * vectors, p = 16, the round-11 S2TierProbe, since removed; recorded
+    * in SURVEY.md's round-11 status; ground truth s1): the round-10
     * full-enumeration tier (wb 14, r 5, all 3,473 masks) recalls 0.84;
     * the same 6,885-mask budget spent on the TOP-ranked masks of the
     * deeper r<=6 / wb=16 pool recalls 1.00 — vs 0.92 for full
@@ -62,7 +63,8 @@ object Similarity {
     * tables x T masks, INDEPENDENT of N — a shrinking corpus fraction
     * as N grows).
     *
-    * DEEPER plane counts were swept and rejected (round 11, S2TierProbe
+    * DEEPER plane counts were swept and rejected (round 11, the same
+    * S2TierProbe; SURVEY.md's round-11 status has its full table
     * at sf10, same budget): p=18 recalls 0.76 (r<=6) / 0.84 (r<=8) /
     * 0.94 only at a DOUBLED 13,770-mask budget; p=20 collapses to
     * 0.58-0.62 at 4% candidates — true neighbors disagree on more bits

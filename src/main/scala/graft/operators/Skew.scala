@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Skew-handling utilities (SURVEY §4).
   *
-  * DECISION RULE (measured, round 13 — Q40AqeProbe on sf10, one hot
+  * DECISION RULE (measured, round 13 — the Q40AqeProbe main, since
+  * removed; SURVEY.md §4 records the rule — on sf10, one hot
   * partkey carrying 10% / 33% of a 60M-row lineitem, min-of-3 each):
   *
   *  1. FIRST RESORT: the plain join with AQE's skew splitter TUNED.

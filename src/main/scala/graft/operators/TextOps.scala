@@ -53,7 +53,8 @@ object TextOps {
     * [[t2Of]]'s two-stage projection and [[t14]]'s fused single scan so
     * the quality kernel can never drift between them. `punct` is the
     * native code-point class count — exactly the characters the oracle's
-    * regexp_replace removes, without the regex engine (T2Anatomy: the
+    * regexp_replace removes, without the regex engine (the round-10
+    * T2Anatomy probe, since removed; SURVEY.md's round-10 status: the
     * punct regex was t2's hottest kernel at 1.5 s/sf1; the native count
     * is a byte scan).
     */

@@ -30,7 +30,8 @@ object Materialize {
     * (Lloyd assignments, LSH bucketing, PQ encodes). A small-SF parquet
     * table splits into fewer — and size-skewed — input partitions than
     * the session has cores, and a localCheckpoint FREEZES that layout for
-    * every downstream pass: measured at sf10 (round 12, PartProbe), the
+    * every downstream pass: measured at sf10 by the round-12 PartProbe
+    * (since removed; recorded in SURVEY.md's round-12 status), the
     * 52 MB embeddings table read as 13 skewed partitions ran the native
     * argmin scan in 6.2 s vs 0.64 s after repartition(32) — a 10× idle-
     * core tax paid on every one of ivfTrain's five corpus passes. Never

@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Why this exists as a library path and not just inside h5: the round-13
   * sf100 probe identified q5's raw fact-fact SMJ shuffle as the
-  * single-box I/O coupler (docs/SF100_r13.md), and Q5BucketProbe measured
+  * single-box I/O coupler (docs/SF100_r13.md), and the round-13
+  * Q5BucketProbe (since removed; docs/Q5BUCKET_r13.md) measured
   * the fix — the 32-bucket layout runs the same join 2.7× faster at sf10
   * (8.64 → 3.18 s), drops the exchanges feeding the join from 7 to 5
   * (both removed exchanges are the fact shuffles), and collapses run

@@ -82,7 +82,7 @@ object Roundtrip {
   def h5(s: SparkSession, dir: String): DataFrame = {
     // the bucketed table copies are h5's INPUT layout (bucketing is an
     // ingest-time investment amortized over every co-located join — the
-    // Q5BucketProbe story): the SHARED per-dir [[Bucketed]] layout, the
+    // docs/Q5BUCKET_r13.md story): the SHARED per-dir [[Bucketed]] layout, the
     // same one q60's fact join resolves, dropped by [[Bucketed.clear]];
     // the timed op is the exchange-free SMJ itself. h5WithCleanup stays
     // the uncached per-invocation form for the plan-shape specs.

@@ -28,7 +28,8 @@ object Tables {
     * columns land as TimestampType DIRECTLY IN THE SCAN (sessions pin UTC,
     * so the values are exactly the µs DuckDB reads) — a post-scan
     * NTZ→TZ cast projection measured 2× on the bare events scan
-    * (A3A6Probe: 0.055 s raw vs 0.119 s cast at sf0.1).
+    * (round-10 A3A6Probe, since removed; SURVEY.md's round-10 status:
+    * 0.055 s raw vs 0.119 s cast at sf0.1).
     */
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

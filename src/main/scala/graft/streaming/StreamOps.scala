@@ -419,8 +419,9 @@ object StreamOps {
         .select(col("a_id"), col("b_id")).distinct().localCheckpoint(true)
       // shingle sets ONLY for batch docs that banded into a candidate
       // pair (d9's discipline): the verify pays |candidates|, never a
-      // second full tokenize+shingle pass over the batch — G10Anatomy at
-      // sf10 measured that second pass at 9.9 s for 23 candidates
+      // second full tokenize+shingle pass over the batch — the round-11
+      // G10Anatomy probe (since removed; recorded in SURVEY.md's round-11
+      // status) measured that second pass at 9.9 s for 23 candidates, sf10
       val candIds = cand.select(col("b_id").as("doc_id")).distinct()
       val bsh = batch.join(graft.plans.Hints.maybeBroadcast(candIds), "doc_id")
         .withColumn("toks", Text.tokens(col("text")))

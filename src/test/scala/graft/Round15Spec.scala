@@ -74,17 +74,6 @@ class Round15Spec extends AnyFunSuite {
     assert(!plan.contains("Exchange hashpartitioning(o_orderkey"))
   }
 
-  test("componentsOf gives exact min-labels on the distributed path") {
-    import s.implicits._
-    // a 10-vertex path: one component. Force the distributed path
-    // (maxLocalEdges=0).
-    val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val viaPublic = operators.Dedup.componentsOf(pairs, 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaPublic == (0L to 9L).map(_ -> 0L).toMap,
-      s"wrong labels: $viaPublic")
-  }
-
   test("stale manifest (regenerated source data) forces a rebuild") {
     val tmpSrc = java.nio.file.Files.createTempDirectory("graft_r15_src_")
     def rmDir(f: java.io.File): Unit = {

@@ -3,11 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 invariants: the Hints.estimate structural contract (sum only
-  * through row-bounded operators), the components label-graph contraction
-  * (bit-identical labels), Bucketed's orphan
-  * sweep + stale-retire grace, h7's bounded generation dirs, and the
-  * PlanAudit partition-filter suppression keyed on the filter's own
-  * references.
+  * through row-bounded operators), Bucketed's orphan sweep + stale-retire
+  * grace, h7's bounded generation dirs, and the PlanAudit partition-filter
+  * suppression keyed on the filter's own references.
   */
 class Round16Spec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -46,44 +44,6 @@ class Round16Spec extends AnyFunSuite {
     val chainedEst = plans.Hints.estimate(chained.queryExecution.optimizedPlan)
     assert(chainedEst < chained.queryExecution.optimizedPlan.stats.sizeInBytes,
       "row-bounded chain lost the sum sharpening")
-  }
-
-  test("components contraction finish matches the local union-find exactly") {
-    import s.implicits._
-    // two path components with interleaved ids; small maxLocalEdges forces
-    // the distributed loop, and after a round or two the surviving label
-    // count drops under it — the contraction path must fire and produce
-    // the same min-labels the driver union-find does
-    val pairs = ((0L until 98L by 2L).map(i => (i, i + 2)) ++ // evens: comp 0
-      (1L until 97L by 2L).map(i => (i, i + 2))) // odds: comp 1
-      .toDF("a_id", "b_id")
-    val truth = operators.Dedup.componentsOf(pairs) // local fast path
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaContraction = operators.Dedup.componentsOf(pairs, 60L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaContraction == truth)
-    assert(truth.values.toSet == Set(0L, 1L), s"bad truth: ${truth.values.toSet}")
-  }
-
-  test("contraction retry gate stays exact when the first attempt fails") {
-    import s.implicits._
-    // dense seeded random graph: one giant component, ~1000 edges. With
-    // maxLocalEdges=900 the distributed loop runs, the early label set
-    // (200 vertices < 900) triggers a contraction attempt whose distinct
-    // label-pair count still exceeds the cap — the FAILED-attempt path —
-    // and the measured-overshoot gate must defer retries until labels
-    // collapse, then finish bit-identical to the driver union-find.
-    val rnd = new scala.util.Random(11)
-    val pairs = (0 until 1000).map { _ =>
-      val a = rnd.nextInt(200).toLong
-      val b = rnd.nextInt(200).toLong
-      (math.min(a, b), math.max(a, b) + (if (a == b) 1 else 0))
-    }.distinct.toDF("a_id", "b_id")
-    val truth = operators.Dedup.componentsOf(pairs) // local fast path
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaGate = operators.Dedup.componentsOf(pairs, 900L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaGate == truth)
   }
 
   test("q49 plans with NO fact exchange (bucketed facts, dims pruned first)") {

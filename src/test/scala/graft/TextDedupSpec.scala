@@ -2,6 +2,8 @@ package graft
 
 import graft.operators.{Dedup, Similarity, TextOps}
 import graft.multimodal.Multimodal
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,21 +18,75 @@ class TextDedupSpec extends AnyFunSuite {
     assert(joined.filter(col("n_tokens") > col("n_chars")).count() == 0)
   }
 
+  private def labelsOf(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+
+  // the local path hands back the driver union-find's rows as a local
+  // relation; the distributed loop ends on a checkpointed scan
+  private def tookLocalPath(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
   test("componentsOf: driver union-find fast path == distributed doubling loop") {
     import s.implicits._
     // chains (deep diameter), a clique, self-contained singleton pairs —
     // the shapes that distinguish min-label propagation bugs
-    val edges = ((1L to 40L).sliding(2).map(w => (w(0), w(1))).toSeq ++
+    val mixed = (1L to 40L).sliding(2).map(w => (w(0), w(1))).toSeq ++
       Seq((100L, 103L), (103L, 101L), (101L, 102L), (100L, 102L),
-        (200L, 201L), (300L, 300L), (50L, 45L))).toDF("a_id", "b_id")
-    val local = Dedup.componentsOf(edges).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    // maxLocalEdges = -1 forces the distributed pointer-doubling loop
-    val dist = Dedup.componentsOf(edges, maxLocalEdges = -1L).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(local == dist)
+        (200L, 201L), (300L, 300L), (50L, 45L))
+    // two path components with interleaved ids: 49 even + 48 odd edges
+    val paths = (0L until 98L by 2L).map(i => (i, i + 2)) ++
+      (1L until 97L by 2L).map(i => (i, i + 2))
+    // dense seeded random graph: one giant component, ~1000 edges over
+    // 200 vertices
+    val rnd = new scala.util.Random(11)
+    val dense = (0 until 1000).map { _ =>
+      val a = rnd.nextInt(200).toLong
+      val b = rnd.nextInt(200).toLong
+      (math.min(a, b), math.max(a, b) + (if (a == b) 1 else 0))
+    }.distinct
+    val truths = Seq(mixed, paths, dense).map { pairs =>
+      val edges = pairs.toDF("a_id", "b_id")
+      val local = Dedup.componentsOf(edges)
+      assert(tookLocalPath(local))
+      val truth = labelsOf(local)
+      // -1 always runs the distributed loop; 60 and 900 send the graphs
+      // with more edges than that through it too
+      Seq(-1L, 60L, 900L).foreach { cap =>
+        val out = Dedup.componentsOf(edges, maxLocalEdges = cap)
+        assert(tookLocalPath(out) == (pairs.size <= cap),
+          s"cap $cap, ${pairs.size} edges")
+        assert(labelsOf(out) == truth, s"cap $cap, ${pairs.size} edges")
+      }
+      truth
+    }
+    val local = truths.head
     assert(local(40L) == 1L && local(102L) == 100L && local(201L) == 200L)
     assert(local(300L) == 300L && local(45L) == 45L && local(50L) == 45L)
+    assert(truths(1).values.toSet == Set(0L, 1L))
+    assert(dense.size > 900, s"dense graph has only ${dense.size} edges")
+  }
+
+  test("componentsOf: maxLocalEdges = edges takes the local path, edges - 1 the loop") {
+    import s.implicits._
+    val pairs = (0L until 9L).map(i => (i, i + 1)) ++ Seq((20L, 22L), (21L, 22L))
+    val edges = pairs.toDF("a_id", "b_id")
+    val atCap = Dedup.componentsOf(edges, maxLocalEdges = pairs.size.toLong)
+    val pastCap = Dedup.componentsOf(edges, maxLocalEdges = pairs.size - 1L)
+    assert(tookLocalPath(atCap) && !tookLocalPath(pastCap))
+    assert(labelsOf(atCap) == labelsOf(pastCap))
+    assert(labelsOf(atCap) ==
+      ((0L to 9L).map(_ -> 0L) ++ Seq(20L, 21L, 22L).map(_ -> 20L)).toMap)
+  }
+
+  test("componentsOf gives exact min-labels on the distributed path") {
+    import s.implicits._
+    // a 10-vertex path: one component. Force the distributed path
+    // (maxLocalEdges=0).
+    val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val viaPublic = operators.Dedup.componentsOf(pairs, 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaPublic == (0L to 9L).map(_ -> 0L).toMap,
+      s"wrong labels: $viaPublic")
   }
 
   test("t2 quality components stay in [0,1]") {
